@@ -11,17 +11,11 @@ once per weekly run", pipeline.py:40-140).
 
 from __future__ import annotations
 
-import uuid
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gov_ec_pipeline_etl_spark.plans.util import T
-from gov_ec_pipeline_etl_spark.streaming.staging import (
-    session_staging_dir,
-    state_partitions_for,
-)
-from gov_ec_pipeline_etl_spark.tables import table_rows
+from gov_ec_pipeline_etl_spark.streaming.staging import replay, stage
 
 
 def tumbling_window_agg(events: DataFrame) -> DataFrame:
@@ -49,23 +43,8 @@ def run_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized result table."""
     # File source wants a directory of files; stage the single parquet
     # file via the batch reader (also normalizes the nanos timestamp).
-    staging = session_staging_dir("events_stream")
-    events = T(spark, sf_dir, "events")
-    events.write.mode("overwrite").parquet(staging)
-
-    stream = spark.readStream.schema(events.schema).parquet(staging)
-    name = f"tumbling_{uuid.uuid4().hex[:8]}"
-    with state_partitions_for(spark, table_rows(sf_dir, "events")):
-        q = (
-            tumbling_window_agg(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    stream, staged = stage(T(spark, sf_dir, "events"), "events_stream")
+    return replay(tumbling_window_agg(stream), "complete", [staged])
 
 
 def run_incremental_file_stream(
@@ -105,25 +84,13 @@ def streaming_dedup(events: DataFrame, within: str = "30 minutes") -> DataFrame:
 def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute streaming_dedup over a replayed event stream (with planted
     duplicate rows), materialized via memory sink."""
-    staging = session_staging_dir("events_dedup")
     events = T(spark, sf_dir, "events")
     # plant exact duplicates: every event twice → dedup must halve it
-    events.unionByName(events).write.mode("overwrite").parquet(staging)
-
-    stream = spark.readStream.schema(events.schema).parquet(staging)
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    with state_partitions_for(spark, 2 * table_rows(sf_dir, "events")):
-        q = (
-            streaming_dedup(stream)
-            .select("event_id", "user_id", F.unix_micros("ts").alias("ts_us"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    stream, staged = stage(events.unionByName(events), "events_dedup")
+    out = streaming_dedup(stream).select(
+        "event_id", "user_id", F.unix_micros("ts").alias("ts_us")
+    )
+    return replay(out, "append", [staged])
 
 
 def session_window_agg(
@@ -174,22 +141,8 @@ def sliding_window_agg(
 def run_sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window aggregation as a real stream run (same harness as
     the tumbling variant)."""
-    staging = session_staging_dir("events_slide")
-    events = T(spark, sf_dir, "events")
-    events.write.mode("overwrite").parquet(staging)
-    stream = spark.readStream.schema(events.schema).parquet(staging)
-    name = f"sliding_{uuid.uuid4().hex[:8]}"
-    with state_partitions_for(spark, table_rows(sf_dir, "events")):
-        q = (
-            sliding_window_agg(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    stream, staged = stage(T(spark, sf_dir, "events"), "events_slide")
+    return replay(sliding_window_agg(stream), "complete", [staged])
 
 
 def run_stream_static_enrichment(
@@ -199,11 +152,7 @@ def run_stream_static_enrichment(
     customer dimension (re-read per micro-batch, broadcast by size) —
     the streaming face of the category-map lookup (reference J2/A1).
     Unmatched users keep null segment (left join), counted per segment."""
-    staging = session_staging_dir("events_enrich")
-    events = T(spark, sf_dir, "events")
-    events.write.mode("overwrite").parquet(staging)
-    stream = spark.readStream.schema(events.schema).parquet(staging)
-
+    stream, staged = stage(T(spark, sf_dir, "events"), "events_enrich")
     dim = T(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
@@ -212,16 +161,7 @@ def run_stream_static_enrichment(
         .groupBy("segment")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return replay(enriched, "complete", [staged])
 
 
 def attribution_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
@@ -271,32 +211,18 @@ def run_attribution_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     advance mid-replay and drop rows — the finite-replay equivalence to
     the batch interval join the oracle asserts.
     """
-    staging = session_staging_dir("events_attr")
     events = T(spark, sf_dir, "events")
-    events.write.mode("overwrite").parquet(staging)
-
-    clicks = (
-        spark.readStream.schema(events.schema)
-        .parquet(staging)
-        .where(F.col("event_type") == "click")
+    clicks, staged = stage(events, "events_attr")
+    # a second, independent file source over the same staged files
+    purchases = spark.readStream.schema(events.schema).parquet(staged)
+    return replay(
+        attribution_join(
+            clicks.where(F.col("event_type") == "click"),
+            purchases.where(F.col("event_type") == "purchase"),
+        ),
+        "append",
+        [staged],
     )
-    purchases = (
-        spark.readStream.schema(events.schema)
-        .parquet(staging)
-        .where(F.col("event_type") == "purchase")
-    )
-    name = f"attr_{uuid.uuid4().hex[:8]}"
-    with state_partitions_for(spark, table_rows(sf_dir, "events")):
-        q = (
-            attribution_join(clicks, purchases)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def run_capped_attribution_stream(
@@ -333,22 +259,7 @@ def run_capped_attribution_stream(
             .drop("__rn")
         )
 
-    staging = session_staging_dir("events_capped")
-    _cap("click").write.mode("overwrite").parquet(staging + "_c")
-    _cap("purchase").write.mode("overwrite").parquet(staging + "_p")
-
-    clicks = spark.readStream.schema(events.schema).parquet(staging + "_c")
-    purchases = spark.readStream.schema(events.schema).parquet(staging + "_p")
-    name = f"cattr_{uuid.uuid4().hex[:8]}"
+    clicks, staged_c = stage(_cap("click"), "events_capped_c")
+    purchases, staged_p = stage(_cap("purchase"), "events_capped_p")
     # capped replay: at most k rows per user per side reach the join
-    with state_partitions_for(spark, table_rows(sf_dir, "events")):
-        q = (
-            attribution_join(clicks, purchases)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return replay(attribution_join(clicks, purchases), "append", [staged_c, staged_p])

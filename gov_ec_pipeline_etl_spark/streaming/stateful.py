@@ -12,7 +12,6 @@ transfer, GroupStateTimeout available for eviction at scale.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -29,8 +28,9 @@ from pyspark.sql.types import (
 
 from gov_ec_pipeline_etl_spark.plans.util import T
 from gov_ec_pipeline_etl_spark.streaming.staging import (
-    session_staging_dir,
-    state_partitions_for,
+    PANDAS_ROWS_PER_STORE,
+    replay,
+    stage,
 )
 
 STATE_SCHEMA = StructType(
@@ -92,31 +92,17 @@ def run_user_counters(
     """Execute the stateful operator over the events table replayed as
     ``n_chunks`` files (state must survive across micro-batches);
     returns the LAST emitted row per user."""
-    staging = session_staging_dir("events_state")
     events = T(spark, sf_dir, "events").select("user_id", "ts", "value")
-    events.repartition(n_chunks).write.mode("overwrite").parquet(staging)
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)  # force multiple micro-batches
-        .parquet(staging)
+    stream, staged = stage(
+        events.repartition(n_chunks),
+        "events_state",
+        maxFilesPerTrigger=1,  # force multiple micro-batches
     )
-    name = f"counters_{uuid.uuid4().hex[:8]}"
-    from gov_ec_pipeline_etl_spark.tables import table_rows
-
-    with state_partitions_for(spark, table_rows(sf_dir, "events")):
-        q = (
-            user_counters_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    all_rows = replay(
+        user_counters_stream(stream), "update", [staged], PANDAS_ROWS_PER_STORE
+    )
     # update-mode memory sink appends one row per key per batch → keep the
     # final (cumulative) row per user: the one with max n_events
-    all_rows = spark.table(name)
     return (
         all_rows.groupBy("user_id")
         .agg(
@@ -210,39 +196,21 @@ def run_streaming_sessionize(
     """Stream the events table as ``n_chunks`` micro-batches through
     the stateful session assembler; return the FINAL session set per
     user (the emission where that user had seen all its events)."""
-    staging = session_staging_dir("events_sess")
     events = T(spark, sf_dir, "events").select("user_id", "event_id", "ts")
     # arbitrary split — the operator is batch-order robust by design
-    events.repartition(n_chunks).write.mode("overwrite").parquet(staging)
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
+    stream, staged = stage(
+        events.repartition(n_chunks), "events_sess", maxFilesPerTrigger=1
     )
-    name = f"sessions_{uuid.uuid4().hex[:8]}"
-    from gov_ec_pipeline_etl_spark.tables import table_rows
-
-    with state_partitions_for(spark, table_rows(sf_dir, "events")):
-        q = (
-            stream.groupBy("user_id")
-            .applyInPandasWithState(
-                _update_user_sessions,
-                outputStructType=SESSION_OUTPUT_SCHEMA,
-                stateStructType=SESSION_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sessions = stream.groupBy("user_id").applyInPandasWithState(
+        _update_user_sessions,
+        outputStructType=SESSION_OUTPUT_SCHEMA,
+        stateStructType=SESSION_STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    all_rows = replay(sessions, "update", [staged], PANDAS_ROWS_PER_STORE)
     from pyspark.sql import Window
 
-    all_rows = spark.table(name)
     w = Window.partitionBy("user_id")
     return (
         all_rows.withColumn("max_seen", F.max("n_seen").over(w))

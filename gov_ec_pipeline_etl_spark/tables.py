@@ -40,9 +40,14 @@ def table_rows(sf_dir: str, name: str) -> int:
     in s02) must not trigger cluster actions: registry enumeration or
     plan-shape inspection would otherwise run a full count per call.
     Footer reads are O(files), the same metadata any catalog holds."""
+    return parquet_rows(table_path(sf_dir, name))
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of a parquet file, or of every ``.parquet`` file under a
+    directory, from footer metadata alone."""
     import pyarrow.parquet as pq
 
-    path = table_path(sf_dir, name)
     if os.path.isdir(path):
         return sum(
             pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows

@@ -214,3 +214,140 @@ def test_capped_attribution_bounds_per_key_output(spark):
     ).select("click_id", "purchase_id")
     extra = out.select("click_id", "purchase_id").exceptAll(full).count()
     assert extra == 0
+
+
+def _st03(spark):
+    from gov_ec_pipeline_etl_spark.plans import all_queries
+
+    return all_queries()["st03_streaming_dedup"].spark(spark, SF_SMOKE)
+
+
+def _oracle_rows(name: str) -> int:
+    from gov_ec_pipeline_etl_spark.oracle import duckdb_connection
+    from gov_ec_pipeline_etl_spark.plans import all_queries
+    from gov_ec_pipeline_etl_spark.plans.registry import oracle_text
+
+    con = duckdb_connection(SF_SMOKE)
+    try:
+        sql = oracle_text(all_queries()[name], SF_SMOKE)
+        return con.execute(f"SELECT count(*) FROM ({sql})").fetchone()[0]
+    finally:
+        con.close()
+
+
+def test_replay_leaves_no_view_and_no_staged_dir(spark, monkeypatch):
+    """A replay drops its memory sink's temp view and deletes the files
+    it read; the returned frame still holds every result row."""
+    from gov_ec_pipeline_etl_spark.streaming import staging
+
+    made: list[str] = []
+    fresh = staging.session_staging_dir
+
+    def recording(prefix):
+        made.append(fresh(prefix))
+        return made[-1]
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    monkeypatch.setattr(staging, "session_staging_dir", recording)
+    before = views()
+    out = _st03(spark)
+    assert made and not any(os.path.exists(p) for p in made)
+    assert views() == before
+    assert out.count() == _oracle_rows("st03_streaming_dedup")
+
+
+def test_replay_width_never_exceeds_session(spark):
+    from gov_ec_pipeline_etl_spark.streaming.staging import (
+        PANDAS_ROWS_PER_STORE,
+        WIDTH,
+        replay_width,
+    )
+
+    narrow = spark.newSession()
+    narrow.conf.set(WIDTH, "2")
+    assert replay_width(narrow, 1_000_000) == 2
+    narrow.conf.set(WIDTH, "64")
+    assert replay_width(narrow, 1_000_000) == 20
+    assert replay_width(narrow, 4_000) == 1
+    assert replay_width(narrow, 0) == 1
+    assert replay_width(narrow, 100_000, PANDAS_ROWS_PER_STORE) == 4
+    assert replay_width(narrow, 10_000, PANDAS_ROWS_PER_STORE) == 1
+
+
+def test_replay_restores_caller_conf(spark):
+    """The runner scopes width and no-data batches to the stream; the
+    caller's session reads the same values afterwards, set or unset."""
+    from gov_ec_pipeline_etl_spark.streaming.staging import NO_DATA_BATCHES, WIDTH
+
+    s = spark.newSession()
+    s.conf.set(WIDTH, "7")
+    s.conf.unset(NO_DATA_BATCHES)
+    before = {k: s.conf.get(k, None) for k in (WIDTH, NO_DATA_BATCHES)}
+    assert before == {WIDTH: "7", NO_DATA_BATCHES: None}
+    _st03(s).count()
+    assert {k: s.conf.get(k, None) for k in (WIDTH, NO_DATA_BATCHES)} == before
+    s.conf.set(NO_DATA_BATCHES, "true")
+    _st03(s).count()
+    assert s.conf.get(WIDTH) == "7" and s.conf.get(NO_DATA_BATCHES) == "true"
+
+
+def test_replay_cleans_up_when_start_fails(spark):
+    """A frame rejected at ``start()`` still has its staged input deleted
+    and the caller's conf restored."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from gov_ec_pipeline_etl_spark.streaming.staging import (
+        NO_DATA_BATCHES,
+        WIDTH,
+        replay,
+        stage,
+    )
+
+    s = spark.newSession()
+    s.conf.set(WIDTH, "7")
+    before = {k: s.conf.get(k, None) for k in (WIDTH, NO_DATA_BATCHES)}
+    stream, staged = stage(s.range(10).withColumnRenamed("id", "k"), "start_fails")
+    # a streaming aggregation without a watermark cannot run in append mode
+    with pytest.raises(AnalysisException):
+        replay(stream.groupBy("k").count(), "append", [staged])
+    assert not os.path.exists(staged)
+    assert {k: s.conf.get(k, None) for k in (WIDTH, NO_DATA_BATCHES)} == before
+
+
+def test_st03_runs_one_micro_batch_on_one_store(spark, monkeypatch):
+    """The replay of 2x the smoke events runs a single micro-batch (no
+    eviction-only batch) with state sized to its input: one store."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    queries = []
+    start = DataStreamWriter.start
+
+    def recording(self, *a, **k):
+        queries.append(start(self, *a, **k))
+        return queries[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording)
+    _st03(spark)
+    (q,) = queries
+    progress = q.recentProgress
+    assert len(progress) == 1
+    ops = progress[0].stateOperators
+    assert ops and all(op.numShufflePartitions == 1 for op in ops)
+
+
+def test_memory_sink_has_one_site():
+    """Every stream replay goes through the one runner in staging.py."""
+    import gov_ec_pipeline_etl_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    hits = []
+    for d, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(d, f)) as fh:
+                    hits += [f] * fh.read().count('format("memory")')
+    assert hits == ["staging.py"]
+

@@ -51,7 +51,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=".localdata/sf1")
     ap.add_argument("--out", default="SCALE_CORES_sf1.json")
-    ap.add_argument("--cores", nargs="*", type=int, default=[8, 32])
+    ap.add_argument("--cores", nargs="+", type=int, default=[8, 32])
     args = ap.parse_args()
 
     commit = subprocess.run(
@@ -81,12 +81,13 @@ def main() -> int:
             }
             print(f"{name} cores={cores}: steady={steady} cold={cold}", flush=True)
 
-    lo, hi = (str(c) for c in sorted(args.cores)[:2])
-    for name, r in results.items():
-        if lo in r and hi in r and r[hi]["steady_s"]:
-            r["ratio_low_over_high"] = round(
-                r[lo]["steady_s"] / r[hi]["steady_s"], 2
-            )
+    if len(set(args.cores)) >= 2:
+        lo, hi = (str(c) for c in sorted(set(args.cores))[:2])
+        for name, r in results.items():
+            if lo in r and hi in r and r[hi]["steady_s"]:
+                r["ratio_low_over_high"] = round(
+                    r[lo]["steady_s"] / r[hi]["steady_s"], 2
+                )
     art = {
         "commit": commit,
         "sf_dir": args.sf_dir,
