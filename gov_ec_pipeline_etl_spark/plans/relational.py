@@ -22,7 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gov_ec_pipeline_etl_spark.plans.registry import register
-from gov_ec_pipeline_etl_spark.plans.util import T
+from gov_ec_pipeline_etl_spark.plans.util import T, revenue_sum
 
 
 @register(
@@ -71,7 +71,8 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         SELECT
           l_orderkey,
-          ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+          CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount)
+                              AS DECIMAL(18, 4))), 2) AS DOUBLE) AS revenue,
           strftime(o_orderdate, '%Y-%m-%d')                  AS o_orderdate_d
         FROM customer
         JOIN orders   ON c_custkey = o_custkey
@@ -98,11 +99,7 @@ def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
+        .agg(revenue_sum().alias("revenue"))
         .select(
             "l_orderkey",
             "revenue",
@@ -151,7 +148,9 @@ def q04_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q05_region_revenue",
     oracle="""
-        SELECT n_name, ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        SELECT n_name,
+               CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount)
+                                   AS DECIMAL(18, 4))), 2) AS DOUBLE) AS revenue
         FROM customer
         JOIN orders   ON c_custkey = o_custkey
         JOIN lineitem ON l_orderkey = o_orderkey
@@ -188,11 +187,7 @@ def q05_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
+        .agg(revenue_sum().alias("revenue"))
     )
 
 
@@ -387,7 +382,8 @@ def x13_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         SELECT o_orderpriority,
                COUNT(*) AS n_lines,
-               ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+               CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount)
+                                   AS DECIMAL(18, 4))), 2) AS DOUBLE) AS revenue
         FROM orders JOIN lineitem
           ON l_orderkey = o_orderkey
          AND l_shipdate >= o_orderdate
@@ -412,9 +408,7 @@ def q14_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
+            revenue_sum().alias("revenue"),
         )
     )
 
@@ -445,16 +439,7 @@ def x15_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            F.round(
-                F.sum(
-                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                        "decimal(18,4)"
-                    )
-                ),
-                2,
-            )
-            .cast("double")
-            .alias("revenue"),
+            revenue_sum().alias("revenue"),
             F.countDistinct("l_suppkey").alias("n_suppliers"),
         )
     )

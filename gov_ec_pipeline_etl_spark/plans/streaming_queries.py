@@ -3,9 +3,10 @@ supplied natively by Structured Streaming; the engine exposes it as
 first-class, oracle-checked where batch-equivalent).
 
 st01 runs a REAL streaming query (file source → watermarked tumbling
-window → memory sink, Trigger.AvailableNow); its oracle is the batch
-equivalence guarantee of complete-mode windowed aggregation. st02 is
-session windowing, oracled by a gaps-and-islands SQL rewrite.
+window → parquet result via foreachBatch, Trigger.AvailableNow); its
+oracle is the batch equivalence guarantee of complete-mode windowed
+aggregation. st02 is session windowing, oracled by a gaps-and-islands
+SQL rewrite.
 """
 
 from __future__ import annotations
@@ -33,10 +34,10 @@ from gov_ec_pipeline_etl_spark.streaming.events import (
         GROUP BY window_start_us, event_type
     """,
     doc="True Structured Streaming execution: parquet file source → "
-    "10-min watermark → 1-hour tumbling windows per event_type → memory "
-    "sink (complete mode, Trigger.AvailableNow). Complete-mode windowed "
-    "aggregation over a finite replay equals the batch GROUP BY — which "
-    "is exactly what the oracle checks.",
+    "10-min watermark → 1-hour tumbling windows per event_type → parquet "
+    "result via foreachBatch (complete mode, Trigger.AvailableNow). "
+    "Complete-mode windowed aggregation over a finite replay equals the "
+    "batch GROUP BY — which is exactly what the oracle checks.",
     tags=("streaming", "window"),
 )
 def st01_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -114,7 +115,7 @@ def st02_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st04_stateful_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gov_ec_pipeline_etl_spark.streaming.stateful import run_user_counters
 
-    return run_user_counters(spark, sf_dir, n_chunks=3)
+    return run_user_counters(spark, sf_dir)
 
 
 @register(
@@ -179,7 +180,7 @@ def v02_streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + MUT_OFFSET).alias("doc_id"),
         F.concat("text", F.lit(" zz0 zz1 zz2")).alias("text"),
     )
-    return run_streaming_neardup_ingest(spark, docs, arrivals, n_batches=3)
+    return run_streaming_neardup_ingest(spark, docs, arrivals)
 
 
 from gov_ec_pipeline_etl_spark.plans.quality_queries import (
@@ -206,7 +207,7 @@ def v03_streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
-    return run_streaming_quality_gate(spark, docs, n_batches=3)
+    return run_streaming_quality_gate(spark, docs)
 
 
 def _v04_oracle(_sf_dir: str | None = None) -> str:
@@ -265,7 +266,7 @@ def v04_streaming_bpe_meter(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r["merge_left"], r["merge_right"])
             for r in m.orderBy("step").collect()
         ]
-    return run_streaming_bpe_meter(spark, docs, merges, n_batches=3)
+    return run_streaming_bpe_meter(spark, docs, merges)
 
 
 from gov_ec_pipeline_etl_spark.plans.hygiene_queries import (
@@ -297,7 +298,7 @@ def v05_streaming_pii_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plant BEFORE staging so the stream scrubs the same bytes the
     # oracle replays (planting is per-row deterministic)
     planted = docs.select("doc_id", plant_pii(docs).alias("text"))
-    return run_streaming_pii_gate(spark, planted, n_batches=3)
+    return run_streaming_pii_gate(spark, planted)
 
 
 from gov_ec_pipeline_etl_spark.plans.analytics_queries import (
@@ -327,7 +328,7 @@ def v06_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_streaming_sessionize,
     )
 
-    return run_streaming_sessionize(spark, sf_dir, n_chunks=3)
+    return run_streaming_sessionize(spark, sf_dir)
 
 
 from gov_ec_pipeline_etl_spark.functions.hashing import (
@@ -390,7 +391,7 @@ def v07_streaming_cms_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
-    return run_streaming_cms_ingest(spark, docs, n_batches=3)
+    return run_streaming_cms_ingest(spark, docs)
 
 
 _V08_ORACLE = """
@@ -429,7 +430,7 @@ def v08_streaming_hll_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = T(spark, sf_dir, "events").select("event_type", "user_id")
-    return run_streaming_hll_ingest(spark, ev, n_batches=3)
+    return run_streaming_hll_ingest(spark, ev)
 
 
 _V09_K = 8

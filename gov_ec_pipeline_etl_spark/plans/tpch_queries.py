@@ -29,7 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from gov_ec_pipeline_etl_spark.plans.registry import register
-from gov_ec_pipeline_etl_spark.plans.util import T
+from gov_ec_pipeline_etl_spark.plans.util import T, revenue_sum
 
 
 @register(
@@ -277,7 +277,8 @@ def x42_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
     oracle="""
         SELECT c_custkey, c_name,
-               ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+               CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount)
+                                   AS DECIMAL(18, 4))), 2) AS DOUBLE) AS revenue,
                ROUND(c_acctbal, 2) AS acctbal, n_name
         FROM customer
         JOIN orders   ON c_custkey = o_custkey
@@ -308,11 +309,7 @@ def x43_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
+        .agg(revenue_sum().alias("revenue"))
         .select(
             "c_custkey",
             "c_name",

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from gov_ec_pipeline_etl_spark.tables import read_table, table_path
 
@@ -14,6 +14,15 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return _read_events(spark, sf_dir)
     return read_table(spark, sf_dir, name)
+
+
+def revenue_sum() -> Column:
+    """``ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)`` as an exact
+    sum: each row is cast to DECIMAL(18,4) before SUM, so the rounded cent
+    does not depend on the order rows are added in (the scan's task split,
+    a join's row order). Oracles spell the same casts in SQL."""
+    line = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    return F.round(F.sum(line.cast("decimal(18,4)")), 2).cast("double")
 
 
 def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:

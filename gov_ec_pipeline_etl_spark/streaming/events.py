@@ -38,9 +38,9 @@ def tumbling_window_agg(events: DataFrame) -> DataFrame:
 
 def run_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the tumbling-window aggregation as a REAL stream: parquet
-    file source → watermark → windowed agg → memory sink, complete mode,
-    Trigger.AvailableNow (all available data, then stop). Returns the
-    materialized result table."""
+    file source → watermark → windowed agg → parquet result directory
+    (each batch replaces it: complete mode), Trigger.AvailableNow (all
+    available data, then stop). Returns the result read back."""
     # File source wants a directory of files; stage the single parquet
     # file via the batch reader (also normalizes the nanos timestamp).
     stream, staged = stage(T(spark, sf_dir, "events"), "events_stream")
@@ -83,7 +83,7 @@ def streaming_dedup(events: DataFrame, within: str = "30 minutes") -> DataFrame:
 
 def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute streaming_dedup over a replayed event stream (with planted
-    duplicate rows), materialized via memory sink."""
+    duplicate rows); the appended output is read back from parquet."""
     events = T(spark, sf_dir, "events")
     # plant exact duplicates: every event twice → dedup must halve it
     stream, staged = stage(events.unionByName(events), "events_dedup")

@@ -24,18 +24,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from gov_ec_pipeline_etl_spark.streaming.staging import session_staging_dir
+from gov_ec_pipeline_etl_spark.streaming.staging import (
+    BATCHES,
+    drain,
+    session_staging_dir,
+    stage,
+)
 
 
 def run_streaming_neardup_ingest(
     spark: SparkSession,
     corpus: DataFrame,
     arrivals: DataFrame,
-    n_batches: int = 3,
     threshold: float = 0.5,
     k: int = 3,
 ) -> DataFrame:
-    """Stream ``arrivals`` in ``n_batches`` micro-batches against a
+    """Stream ``arrivals`` in ``BATCHES`` micro-batches against a
     sketch index built from ``corpus``; returns the appended
     (new_id, corpus_id, jaccard) result frame."""
     from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
@@ -44,51 +48,26 @@ def run_streaming_neardup_ingest(
         read_sketch_index,
     )
 
-    base = session_staging_dir("neardup_ingest")
-    idx, staging, out, ckpt = (
-        f"{base}/idx",
-        f"{base}/arrivals",
-        f"{base}/out",
-        f"{base}/ckpt",
-    )
+    idx = session_staging_dir("neardup_index")
     build_sketch_index(corpus, "doc_id", "text", idx, k=k)
-    # one file per micro-batch: maxFilesPerTrigger=1 forces the check to
-    # run as N separate foreachBatch invocations, not one big batch
-    arrivals.repartition(n_batches).write.mode("overwrite").parquet(staging)
     stored = read_sketch_index(spark, idx)
-
-    def check_batch(batch: DataFrame, _batch_id: int) -> None:
-        from gov_ec_pipeline_etl_spark.caching import unpersist_inputs
-
-        out_df = incremental_neardup_against(
+    # one file per micro-batch: the check runs as BATCHES separate
+    # foreachBatch invocations, not one big batch; the loop releases the
+    # per-batch arrival sketch the operator persists — an unbounded ingest
+    # would otherwise pin one per trigger
+    stream, staged = stage(arrivals, "neardup_ingest", BATCHES)
+    return drain(
+        stream,
+        "append",
+        [staged, idx],
+        each=lambda batch: incremental_neardup_against(
             batch, stored, "doc_id", "text", k=k, threshold=threshold
-        )
-        try:
-            out_df.write.mode("append").parquet(out)
-        finally:
-            # release the per-batch arrival sketch the operator persists —
-            # an unbounded ingest would otherwise pin one per trigger
-            unpersist_inputs(out_df)
-
-    q = (
-        spark.readStream.schema(arrivals.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(check_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.schema("new_id bigint, corpus_id bigint, jaccard double").parquet(
-        out
+        ),
     )
 
 
-def run_streaming_quality_gate(
-    spark: SparkSession, docs: DataFrame, n_batches: int = 3
-) -> DataFrame:
-    """Stream ``docs`` in ``n_batches`` micro-batches through the Gopher
+def run_streaming_quality_gate(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    """Stream ``docs`` in ``BATCHES`` micro-batches through the Gopher
     repetition gate (``operators.quality.gopher_repetition``); each
     foreachBatch scores its batch and appends the per-document quality
     row. The signal is purely per-document — no cross-doc state — so
@@ -101,38 +80,21 @@ def run_streaming_quality_gate(
     Kafka/file source."""
     from gov_ec_pipeline_etl_spark.operators.quality import gopher_repetition
 
-    base = session_staging_dir("quality_gate")
-    staging, out, ckpt = f"{base}/docs", f"{base}/out", f"{base}/ckpt"
-    docs.repartition(n_batches).write.mode("overwrite").parquet(staging)
-
-    def score_batch(batch: DataFrame, _batch_id: int) -> None:
-        gopher_repetition(batch, "doc_id", "text").write.mode(
-            "append"
-        ).parquet(out)
-
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    stream, staged = stage(docs, "quality_gate", BATCHES)
+    return drain(
+        stream,
+        "append",
+        [staged],
+        each=lambda batch: gopher_repetition(batch, "doc_id", "text"),
     )
-    q.awaitTermination()
-    return spark.read.schema(
-        "id bigint, top2_frac double, top3_frac double, top4_frac double, "
-        "dup5_frac double, flagged int"
-    ).parquet(out)
 
 
 def run_streaming_bpe_meter(
     spark: SparkSession,
     docs: DataFrame,
     merges: list[tuple[str, str]],
-    n_batches: int = 3,
 ) -> DataFrame:
-    """Stream ``docs`` in ``n_batches`` micro-batches through a learned
+    """Stream ``docs`` in ``BATCHES`` micro-batches through a learned
     BPE merge table: each foreachBatch segments its batch's tokens with
     ``apply_bpe`` (the merge list is catalog-scale literals — the same
     class as broadcast centroid tables) and appends the per-document
@@ -150,19 +112,15 @@ def run_streaming_bpe_meter(
 
     from gov_ec_pipeline_etl_spark.operators.bpe import apply_bpe
 
-    base = session_staging_dir("bpe_meter")
-    staging, out, ckpt = f"{base}/docs", f"{base}/out", f"{base}/ckpt"
-    docs.repartition(n_batches).write.mode("overwrite").parquet(staging)
-
-    def meter_batch(batch: DataFrame, _batch_id: int) -> None:
+    def meter_batch(batch: DataFrame) -> DataFrame:
         norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-        stream = batch.select(
+        words = batch.select(
             F.col("doc_id").alias("id"),
             "source",
             F.explode(F.split(norm, " ")).alias("w"),
         ).where(F.col("w").rlike("^[a-z0-9]+$"))
-        (
-            stream.select(
+        return (
+            words.select(
                 "id", "source", F.size(apply_bpe("w", merges)).alias("ns")
             )
             .groupBy("id", "source")
@@ -170,29 +128,14 @@ def run_streaming_bpe_meter(
                 F.sum("ns").alias("n_syms"),
                 F.count("*").alias("n_toks"),
             )
-            .write.mode("append")
-            .parquet(out)
         )
 
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(meter_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.schema(
-        "id bigint, source string, n_syms bigint, n_toks bigint"
-    ).parquet(out)
+    stream, staged = stage(docs, "bpe_meter", BATCHES)
+    return drain(stream, "append", [staged], each=meter_batch)
 
 
-def run_streaming_pii_gate(
-    spark: SparkSession, docs: DataFrame, n_batches: int = 3
-) -> DataFrame:
-    """Stream ``docs`` in ``n_batches`` micro-batches through the PII
+def run_streaming_pii_gate(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    """Stream ``docs`` in ``BATCHES`` micro-batches through the PII
     scrub (``operators.hygiene.pii_scrub``); each foreachBatch counts
     and redacts its batch and appends the per-document scrub row. The
     scrub is purely per-document regex work — no cross-doc state — so
@@ -205,33 +148,12 @@ def run_streaming_pii_gate(
     same loop runs unbounded on a Kafka/file source."""
     from gov_ec_pipeline_etl_spark.operators.hygiene import pii_scrub
 
-    base = session_staging_dir("pii_gate")
-    staging, out, ckpt = f"{base}/docs", f"{base}/out", f"{base}/ckpt"
-    docs.repartition(n_batches).write.mode("overwrite").parquet(staging)
-
-    def scrub_batch(batch: DataFrame, _batch_id: int) -> None:
-        pii_scrub(batch).write.mode("append").parquet(out)
-
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(scrub_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.schema(
-        "doc_id bigint, n_email bigint, n_phone bigint, n_ip bigint, "
-        "redacted_md5 string"
-    ).parquet(out)
+    stream, staged = stage(docs, "pii_gate", BATCHES)
+    return drain(stream, "append", [staged], each=pii_scrub)
 
 
-def run_streaming_cms_ingest(
-    spark: SparkSession, docs: DataFrame, n_batches: int = 3
-) -> DataFrame:
-    """Stream ``docs`` in ``n_batches`` micro-batches; each foreachBatch
+def run_streaming_cms_ingest(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    """Stream ``docs`` in ``BATCHES`` micro-batches; each foreachBatch
     builds ITS OWN 4x1024 Count-Min grid and appends it to a grid
     store — the streaming deployment of the mergeable-summaries algebra
     u51 proves in batch (integer counters: sum of per-batch grids ==
@@ -246,10 +168,6 @@ def run_streaming_cms_ingest(
 
     from gov_ec_pipeline_etl_spark.functions.hashing import portable_hash64
 
-    base = session_staging_dir("cms_ingest")
-    staging, store, ckpt = f"{base}/docs", f"{base}/grids", f"{base}/ckpt"
-    docs.repartition(n_batches).write.mode("overwrite").parquet(staging)
-
     seeds = F.explode(F.sequence(F.lit(0), F.lit(3))).alias("s")
 
     def seeded_rows(df: DataFrame) -> DataFrame:
@@ -261,29 +179,16 @@ def run_streaming_cms_ingest(
             "token", "s", (h * (F.col("s") + 1) % 1024).alias("bucket")
         )
 
-    def grid_batch(batch: DataFrame, _batch_id: int) -> None:
-        (
+    def grid_batch(batch: DataFrame) -> DataFrame:
+        return (
             seeded_rows(batch)
             .groupBy("s", "bucket")
             .agg(F.count(F.lit(1)).alias("n"))
-            .write.mode("append")
-            .parquet(store)
         )
 
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(grid_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
+    stream, staged = stage(docs, "cms_ingest", BATCHES)
     merged = (
-        spark.read.schema("s int, bucket bigint, n bigint")
-        .parquet(store)
+        drain(stream, "append", [staged], each=grid_batch)
         .groupBy("s", "bucket")
         .agg(F.sum("n").alias("n"))
     )
@@ -310,10 +215,8 @@ def run_streaming_cms_ingest(
     )
 
 
-def run_streaming_hll_ingest(
-    spark: SparkSession, events: DataFrame, n_batches: int = 3
-) -> DataFrame:
-    """Stream ``events`` in ``n_batches`` micro-batches; each
+def run_streaming_hll_ingest(spark: SparkSession, events: DataFrame) -> DataFrame:
+    """Stream ``events`` in ``BATCHES`` micro-batches; each
     foreachBatch builds per-event-type DataSketches HLL sketches
     (lgConfigK=12, binary columns) and appends them to a sketch store —
     u54's union algebra deployed as the unbounded-ingest state pattern
@@ -332,30 +235,15 @@ def run_streaming_hll_ingest(
     compacts by union, and no raw user id is retained."""
     import pyspark.sql.functions as F
 
-    base = session_staging_dir("hll_ingest")
-    staging, store, ckpt = f"{base}/events", f"{base}/sketches", f"{base}/ckpt"
-    events.repartition(n_batches).write.mode("overwrite").parquet(staging)
-
-    def sketch_batch(batch: DataFrame, _batch_id: int) -> None:
-        (
-            batch.groupBy("event_type")
-            .agg(F.expr("hll_sketch_agg(user_id, 12)").alias("sk"))
-            .write.mode("append")
-            .parquet(store)
-        )
-
-    q = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staging)
-        .writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    stream, staged = stage(events, "hll_ingest", BATCHES)
+    stored = drain(
+        stream,
+        "append",
+        [staged],
+        each=lambda batch: batch.groupBy("event_type").agg(
+            F.expr("hll_sketch_agg(user_id, 12)").alias("sk")
+        ),
     )
-    q.awaitTermination()
-
-    stored = spark.read.schema("event_type string, sk binary").parquet(store)
     per_est = stored.groupBy("event_type").agg(
         F.expr("hll_sketch_estimate(hll_union_agg(sk, false))").alias("est")
     )

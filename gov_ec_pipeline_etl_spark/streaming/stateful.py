@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 
 from gov_ec_pipeline_etl_spark.plans.util import T
 from gov_ec_pipeline_etl_spark.streaming.staging import (
+    BATCHES,
     PANDAS_ROWS_PER_STORE,
     replay,
     stage,
@@ -86,22 +87,16 @@ def user_counters_stream(events_stream: DataFrame) -> DataFrame:
     )
 
 
-def run_user_counters(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 3
-) -> DataFrame:
+def run_user_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the stateful operator over the events table replayed as
-    ``n_chunks`` files (state must survive across micro-batches);
-    returns the LAST emitted row per user."""
+    ``BATCHES`` micro-batches (state must survive across them); returns
+    the LAST emitted row per user."""
     events = T(spark, sf_dir, "events").select("user_id", "ts", "value")
-    stream, staged = stage(
-        events.repartition(n_chunks),
-        "events_state",
-        maxFilesPerTrigger=1,  # force multiple micro-batches
-    )
+    stream, staged = stage(events, "events_state", BATCHES)
     all_rows = replay(
         user_counters_stream(stream), "update", [staged], PANDAS_ROWS_PER_STORE
     )
-    # update-mode memory sink appends one row per key per batch → keep the
+    # the update-mode replay appends one row per key per batch → keep the
     # final (cumulative) row per user: the one with max n_events
     return (
         all_rows.groupBy("user_id")
@@ -190,17 +185,13 @@ def _update_user_sessions(
     )
 
 
-def run_streaming_sessionize(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 3
-) -> DataFrame:
-    """Stream the events table as ``n_chunks`` micro-batches through
+def run_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream the events table as ``BATCHES`` micro-batches through
     the stateful session assembler; return the FINAL session set per
     user (the emission where that user had seen all its events)."""
     events = T(spark, sf_dir, "events").select("user_id", "event_id", "ts")
     # arbitrary split — the operator is batch-order robust by design
-    stream, staged = stage(
-        events.repartition(n_chunks), "events_sess", maxFilesPerTrigger=1
-    )
+    stream, staged = stage(events, "events_sess", BATCHES)
     sessions = stream.groupBy("user_id").applyInPandasWithState(
         _update_user_sessions,
         outputStructType=SESSION_OUTPUT_SCHEMA,

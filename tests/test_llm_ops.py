@@ -265,7 +265,7 @@ def test_stateful_counters_match_batch(spark):
     sf = "/root/testdata/sf0.001"
     got = {
         r.user_id: (r.n_events, r.sum_value)
-        for r in run_user_counters(spark, sf, n_chunks=3).collect()
+        for r in run_user_counters(spark, sf).collect()
     }
     want = {
         r.user_id: (r.n, r.s)

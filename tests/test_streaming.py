@@ -235,27 +235,59 @@ def _oracle_rows(name: str) -> int:
         con.close()
 
 
-def test_replay_leaves_no_view_and_no_staged_dir(spark, monkeypatch):
-    """A replay drops its memory sink's temp view and deletes the files
-    it read; the returned frame still holds every result row."""
-    from gov_ec_pipeline_etl_spark.streaming import staging
+def _staging_root() -> str:
+    from gov_ec_pipeline_etl_spark.streaming.staging import session_staging_dir
 
-    made: list[str] = []
-    fresh = staging.session_staging_dir
+    return os.path.dirname(session_staging_dir("root"))
 
-    def recording(prefix):
-        made.append(fresh(prefix))
-        return made[-1]
 
-    def views():
-        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+def _only_result_dir_left(before: set[str], out) -> bool:
+    """Of the staging dirs made since ``before`` one is left, and it holds
+    only the files ``out`` reads: the staged input and the checkpoint are
+    gone."""
+    from urllib.parse import urlparse
 
-    monkeypatch.setattr(staging, "session_staging_dir", recording)
-    before = views()
+    root = _staging_root()
+    (left,) = set(os.listdir(root)) - before
+    files = {
+        os.path.join(d, f)
+        for d, _, fs in os.walk(os.path.join(root, left))
+        for f in fs
+        if not f.startswith((".", "_"))  # checksums, _SUCCESS
+    }
+    return files == {urlparse(f).path for f in out.inputFiles()}
+
+
+def test_replay_leaves_only_its_result_dir(spark):
+    """A replay deletes the files it read and its checkpoint; its result
+    directory is the only one left and still holds every result row."""
+    before = set(os.listdir(_staging_root()))
     out = _st03(spark)
-    assert made and not any(os.path.exists(p) for p in made)
-    assert views() == before
+    assert _only_result_dir_left(before, out)
     assert out.count() == _oracle_rows("st03_streaming_dedup")
+
+
+def test_quality_gate_leaves_only_its_result_dir(spark):
+    """The ingest harnesses run the same loop: v03 leaves no staged input
+    and no checkpoint behind, and still scores every document."""
+    from gov_ec_pipeline_etl_spark.plans import all_queries
+
+    before = set(os.listdir(_staging_root()))
+    out = all_queries()["v03_streaming_quality_gate"].spark(spark, SF_SMOKE)
+    assert _only_result_dir_left(before, out)
+    assert out.count() == _oracle_rows("v03_streaming_quality_gate")
+
+
+def test_replay_of_empty_input_keeps_columns(spark):
+    """An empty replay returns an empty frame with the result's columns
+    (the memory sink did; the parquet read-back must not fail)."""
+    from gov_ec_pipeline_etl_spark.streaming.staging import replay, stage
+
+    empty = spark.range(0).selectExpr("id AS k", "'x' AS v")
+    stream, staged = stage(empty, "empty_input")
+    out = replay(stream.dropDuplicates(["k"]), "append", [staged])
+    assert out.schema.simpleString() == "struct<k:bigint,v:string>"
+    assert out.count() == 0
 
 
 def test_replay_width_never_exceeds_session(spark):
@@ -294,8 +326,8 @@ def test_replay_restores_caller_conf(spark):
 
 
 def test_replay_cleans_up_when_start_fails(spark):
-    """A frame rejected at ``start()`` still has its staged input deleted
-    and the caller's conf restored."""
+    """A frame rejected at ``start()`` still has its staged input and its
+    checkpoint deleted and the caller's conf restored."""
     import pytest
     from pyspark.errors import AnalysisException
 
@@ -309,11 +341,13 @@ def test_replay_cleans_up_when_start_fails(spark):
     s = spark.newSession()
     s.conf.set(WIDTH, "7")
     before = {k: s.conf.get(k, None) for k in (WIDTH, NO_DATA_BATCHES)}
+    dirs = set(os.listdir(_staging_root()))
     stream, staged = stage(s.range(10).withColumnRenamed("id", "k"), "start_fails")
     # a streaming aggregation without a watermark cannot run in append mode
     with pytest.raises(AnalysisException):
         replay(stream.groupBy("k").count(), "append", [staged])
-    assert not os.path.exists(staged)
+    # neither the staged input nor the checkpoint is left
+    assert set(os.listdir(_staging_root())) == dirs
     assert {k: s.conf.get(k, None) for k in (WIDTH, NO_DATA_BATCHES)} == before
 
 
@@ -338,16 +372,23 @@ def test_st03_runs_one_micro_batch_on_one_store(spark, monkeypatch):
     assert ops and all(op.numShufflePartitions == 1 for op in ops)
 
 
-def test_memory_sink_has_one_site():
-    """Every stream replay goes through the one runner in staging.py."""
+def test_one_stream_write_loop_and_no_memory_sink():
+    """Every finite replay goes through the one loop in staging.py: no
+    memory sink anywhere, and ``foreachBatch`` only there and in the
+    streaming CDC sink."""
     import gov_ec_pipeline_etl_spark as pkg
 
     root = os.path.dirname(pkg.__file__)
-    hits = []
+    memory, loops = [], set()
     for d, _, files in os.walk(root):
         for f in files:
             if f.endswith(".py"):
                 with open(os.path.join(d, f)) as fh:
-                    hits += [f] * fh.read().count('format("memory")')
-    assert hits == ["staging.py"]
+                    text = fh.read()
+                rel = os.path.relpath(os.path.join(d, f), root)
+                memory += [rel] * text.count('format("memory")')
+                if "foreachBatch(" in text:
+                    loops.add(rel)
+    assert memory == []
+    assert loops == {"streaming/staging.py", "sinks/upsert.py"}
 
