@@ -15,7 +15,7 @@ operators are part of the LLM-pipeline tier the engine adds on top.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 
 # Shared regex vocabulary — deliberately simple patterns that parse
 # identically under Java regex (Spark) and RE2 (DuckDB oracles): ASCII
@@ -102,6 +102,17 @@ def pii_scrub(
     return df.select(*cols)
 
 
+def line_segments(norm: Column, seg_tokens: int) -> Column:
+    """The ``seg_tokens``-token lines of a single-space-separated text:
+    segment i is ``array_join(slice(split(norm, ' '), seg_tokens*i+1,
+    seg_tokens), ' ')`` byte for byte, empty tokens included (a tab or
+    newline at an end of the text leaves one: ``trim`` strips spaces only).
+    One codegen'd regex, no lambda; null for a null text."""
+    return F.regexp_extract_all(
+        norm, F.lit(f"(?:^| )([^ ]*(?: [^ ]*){{0,{seg_tokens - 1}}})"), F.lit(1)
+    )
+
+
 def corpus_line_dedup(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -119,47 +130,28 @@ def corpus_line_dedup(
     kept_md5 hashes the document rebuilt from its surviving lines in
     original order.
 
-    Scale shape (r11: the line TEXT never crosses an exchange — at
-    100 TB the exploded lines ARE the corpus, and the old form shuffled
-    them twice): the exploded rows carry only (doc_id, seg_idx,
-    xxhash64(line)) — 8-byte identities, the guide §2.3 keys-not-
-    payloads move, same accepted ~2⁻⁶⁴ collision trade as the span/
-    anchor identities of u30/u62. One hash-keyed groupBy counts lines
-    (map-side combine absorbs hot boilerplate; no per-line sort, so a
-    line owned by 30% of the corpus is an aggregate cell, not a window
-    straggler); the removal join is hash-keyed against the
-    just-aggregated table so AQE plans it off the same exchange, and
-    only REMOVED (doc_id, seg_idx) ints reach the per-doc aggregate.
-    Reassembly is MAP-SIDE: the removal-index lists join back to the
-    docs (broadcast when small — removed lines are the duplicated tail
-    of the corpus, not the corpus) and each doc re-derives its segments
-    from its own text and drops the removed indexes in one projection."""
-    from gov_ec_pipeline_etl_spark.caching import hold
+    Scale shape (the line TEXT never crosses an exchange — at 100 TB the
+    exploded lines ARE the corpus): the exploded rows carry only
+    (doc_id, seg_idx, xxhash64(line)). One hash-keyed groupBy counts
+    lines (map-side combine absorbs hot boilerplate; no per-line sort);
+    the removal join is hash-keyed against the aggregate, and only
+    REMOVED (doc_id, seg_idx) ints reach the per-doc aggregate.
+    Reassembly is MAP-SIDE: the removal-index lists join back to the docs
+    and each doc drops the removed indexes in one projection. Nothing is
+    cached: the stats aggregate and the removal probe each run the
+    codegen'd segmenter (:func:`line_segments`), and building the plan
+    starts no job.
 
+    A line's identity is that one 64-bit hash, so two distinct lines can
+    merge: the birthday bound n²/2⁶⁵ predicts about 270 false merges at
+    10¹¹ distinct lines and 27 000 at 10¹²; a wider identity is open."""
     norm = F.regexp_replace(F.lower(F.trim(text_col)), r"\s+", " ")
     toks = F.split(norm, " ")
     nseg = F.ceil(F.size(toks) / F.lit(float(seg_tokens))).cast("bigint")
-    segs = F.transform(
-        F.sequence(F.lit(0).cast("bigint"), nseg - 1),
-        lambda i: F.array_join(
-            F.slice(toks, (i * seg_tokens + 1).cast("int"), seg_tokens), " "
-        ),
-    )
-    # Persisted+materialized so the interpreted segment-assembly HOF
-    # runs ONCE (the stats aggregate and the removal probe are separate
-    # join branches — no CSE across them, and at small scale AQE
-    # broadcasts the stats side so they don't even share an exchange).
-    # 3 narrow columns; at 100 TB this is the same ledger-sized
-    # materialization as the dedup sketches.
-    seg_rows = (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(segs).alias("seg_idx", "seg"),
-        )
-        .select("doc_id", "seg_idx", F.xxhash64("seg").alias("seg_h"))
-        .persist()
-    )
-    seg_rows.count()
+    seg_rows = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(line_segments(norm, seg_tokens)).alias("seg_idx", "seg"),
+    ).select("doc_id", "seg_idx", F.xxhash64("seg").alias("seg_h"))
     stats = seg_rows.groupBy("seg_h").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.min(F.struct("doc_id", "seg_idx")).alias("first"),
@@ -170,9 +162,7 @@ def corpus_line_dedup(
         (F.col("doc_id") != F.col("first.doc_id"))
         | (F.col("seg_idx") != F.col("first.seg_idx"))
     )
-    removed = removed_rows.groupBy("doc_id").agg(
-        F.collect_set("seg_idx").alias("__rm")
-    )
+    removed = removed_rows.groupBy("doc_id").agg(F.collect_set("seg_idx").alias("__rm"))
     # Map-side rebuild at TOKEN level: kept segments joined by " " are
     # exactly the kept tokens joined by " " (each segment IS its tokens
     # joined by " "), so the rebuild never re-derives the segment
@@ -197,27 +187,19 @@ def corpus_line_dedup(
             ),
         )
     )
-    kept_tok_idx = F.array_except(
-        F.sequence(F.lit(0), ntok - F.lit(1)), rm_tok
-    )
+    kept_tok_idx = F.array_except(F.sequence(F.lit(0), ntok - F.lit(1)), rm_tok)
     kept_text = F.array_join(
         F.transform(kept_tok_idx, lambda i: F.get("__toks", i)), " "
     )
     kept_md5 = F.md5(
         F.when(F.col("__rm").isNull(), F.col("__norm")).otherwise(kept_text)
     )
-    out = (
-        base.join(removed, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_segs",
-            F.coalesce(F.size("__rm"), F.lit(0)).cast("bigint").alias(
-                "n_removed"
-            ),
-            kept_md5.alias("kept_md5"),
-        )
+    return base.join(removed, "doc_id", "left").select(
+        "doc_id",
+        "n_segs",
+        F.coalesce(F.size("__rm"), F.lit(0)).cast("bigint").alias("n_removed"),
+        kept_md5.alias("kept_md5"),
     )
-    return hold(out, seg_rows)
 
 
 EDIT_OFFSET = 7_000_000  # planted-variant id space (MUT_OFFSET is 1M)

@@ -15,7 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gov_ec_pipeline_etl_spark.plans.util import T
-from gov_ec_pipeline_etl_spark.streaming.staging import replay, stage
+from gov_ec_pipeline_etl_spark.streaming.staging import replay, stage, table_stream
 
 
 def tumbling_window_agg(events: DataFrame) -> DataFrame:
@@ -41,10 +41,8 @@ def run_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     file source → watermark → windowed agg → parquet result directory
     (each batch replaces it: complete mode), Trigger.AvailableNow (all
     available data, then stop). Returns the result read back."""
-    # File source wants a directory of files; stage the single parquet
-    # file via the batch reader (also normalizes the nanos timestamp).
-    stream, staged = stage(T(spark, sf_dir, "events"), "events_stream")
-    return replay(tumbling_window_agg(stream), "complete", [staged])
+    stream, path = table_stream(spark, sf_dir, "events")
+    return replay(tumbling_window_agg(stream), "complete", [path])
 
 
 def run_incremental_file_stream(
@@ -84,13 +82,13 @@ def streaming_dedup(events: DataFrame, within: str = "30 minutes") -> DataFrame:
 def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute streaming_dedup over a replayed event stream (with planted
     duplicate rows); the appended output is read back from parquet."""
-    events = T(spark, sf_dir, "events")
-    # plant exact duplicates: every event twice → dedup must halve it
-    stream, staged = stage(events.unionByName(events), "events_dedup")
-    out = streaming_dedup(stream).select(
+    # plant exact duplicates: the file streamed twice → dedup must halve it
+    first, path = table_stream(spark, sf_dir, "events")
+    second, _ = table_stream(spark, sf_dir, "events")
+    out = streaming_dedup(first.unionByName(second)).select(
         "event_id", "user_id", F.unix_micros("ts").alias("ts_us")
     )
-    return replay(out, "append", [staged])
+    return replay(out, "append", [path, path])
 
 
 def session_window_agg(
@@ -141,8 +139,8 @@ def sliding_window_agg(
 def run_sliding_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window aggregation as a real stream run (same harness as
     the tumbling variant)."""
-    stream, staged = stage(T(spark, sf_dir, "events"), "events_slide")
-    return replay(sliding_window_agg(stream), "complete", [staged])
+    stream, path = table_stream(spark, sf_dir, "events")
+    return replay(sliding_window_agg(stream), "complete", [path])
 
 
 def run_stream_static_enrichment(
@@ -152,7 +150,7 @@ def run_stream_static_enrichment(
     customer dimension (re-read per micro-batch, broadcast by size) —
     the streaming face of the category-map lookup (reference J2/A1).
     Unmatched users keep null segment (left join), counted per segment."""
-    stream, staged = stage(T(spark, sf_dir, "events"), "events_enrich")
+    stream, path = table_stream(spark, sf_dir, "events")
     dim = T(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
@@ -161,7 +159,7 @@ def run_stream_static_enrichment(
         .groupBy("segment")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    return replay(enriched, "complete", [staged])
+    return replay(enriched, "complete", [path])
 
 
 def attribution_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
@@ -203,25 +201,22 @@ def attribution_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
 
 def run_attribution_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the click→purchase interval join as a real stream-stream
-    join: one staged replay of events feeds two file-source streams
+    join: the events file feeds two independent file-source streams
     (filtered to clicks / purchases), append mode, Trigger.AvailableNow.
 
-    The staging write lands well under the file-source's per-batch file
-    cap, so the replay is a single micro-batch and the watermark cannot
-    advance mid-replay and drop rows — the finite-replay equivalence to
-    the batch interval join the oracle asserts.
-    """
-    events = T(spark, sf_dir, "events")
-    clicks, staged = stage(events, "events_attr")
-    # a second, independent file source over the same staged files
-    purchases = spark.readStream.schema(events.schema).parquet(staged)
+    Each source reads the file as one micro-batch, so the watermark cannot
+    advance mid-replay and drop rows — the finite-replay equivalence to the
+    batch interval join the oracle asserts. State is sized by the file
+    once: the two sides are disjoint subsets of it."""
+    clicks, path = table_stream(spark, sf_dir, "events")
+    purchases, _ = table_stream(spark, sf_dir, "events")
     return replay(
         attribution_join(
             clicks.where(F.col("event_type") == "click"),
             purchases.where(F.col("event_type") == "purchase"),
         ),
         "append",
-        [staged],
+        [path],
     )
 
 

@@ -1,15 +1,20 @@
-"""Staging and the one write loop for finite stream replays.
+"""Stream inputs and the one write loop for finite stream replays.
 
-Every ``run_*`` streaming harness writes its input under a per-process
-staging root (:func:`stage`), reads it back as a parquet file-source
-stream, and runs it once with Trigger.AvailableNow through :func:`drain`,
-which writes each micro-batch (or a per-batch operator's result) into a
-parquet directory under the same root. Stateful replays go through
-:func:`replay`, which sizes state to the input around the same loop.
-``drain`` deletes the staged input and its checkpoint once the stream has
-terminated; the result directory and the root itself are removed at
-interpreter exit, so a SIGKILLed run leaks one root, reclaimed by the OS
-tempdir policy.
+A replay streams parquet files with Trigger.AvailableNow through
+:func:`drain`, which writes each micro-batch (or a per-batch operator's
+result) into a parquet directory under a per-process staging root;
+:func:`replay` sizes state to the input around the same loop. Inputs:
+
+- in place: st01, st03, v01, the sliding-window and the enrichment
+  harnesses replay an unmodified table in one micro-batch, straight from
+  its own parquet file (:func:`table_stream`); nothing is copied;
+- staged: a derived frame (v09's capped sides) or a replay split into
+  micro-batches (st04, v06, the ingest harnesses v02–v05, v07, v08) is
+  first written under the staging root (:func:`stage`).
+
+``drain`` deletes its checkpoint and the inputs under the staging root
+once the stream has ended; the result and the root go at interpreter
+exit (a SIGKILLed run leaks one root, left to the OS tempdir policy).
 """
 
 from __future__ import annotations
@@ -25,7 +30,8 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from gov_ec_pipeline_etl_spark.caching import released
-from gov_ec_pipeline_etl_spark.tables import parquet_rows
+from gov_ec_pipeline_etl_spark.plans.util import allow_nanos, micros_ts
+from gov_ec_pipeline_etl_spark.tables import parquet_rows, read_table, table_path
 
 _ROOT: str | None = None
 
@@ -71,6 +77,22 @@ def stage(frame: DataFrame, prefix: str, batches: int = 1) -> tuple[DataFrame, s
     return reader.parquet(path), path
 
 
+def table_stream(
+    spark: SparkSession, sf_dir: str, name: str
+) -> tuple[DataFrame, str]:
+    """Stream the canonical table ``name`` from its own parquet file (one
+    micro-batch), normalized as ``T()`` reads it; return the stream and
+    the file's path, for :func:`replay` to size state by."""
+    path = table_path(sf_dir, name)
+    allow_nanos(spark, path)
+    reader = spark.readStream.schema(read_table(spark, sf_dir, name).schema)
+    if os.path.isdir(path):
+        return micros_ts(reader.parquet(path)), path
+    # a file source lists a directory: the file's own, filtered to the file
+    reader = reader.option("pathGlobFilter", os.path.basename(path))
+    return micros_ts(reader.parquet(os.path.dirname(path))), path
+
+
 def replay_width(
     spark: SparkSession, n_rows: int, rows_per_store: int = ROWS_PER_STORE
 ) -> int:
@@ -104,7 +126,7 @@ def _scoped(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
 def drain(
     frame: DataFrame,
     mode: str,
-    staged: list[str],
+    inputs: list[str],
     each: Callable[[DataFrame], DataFrame] | None = None,
     confs: dict[str, str] | None = None,
 ) -> DataFrame:
@@ -116,15 +138,15 @@ def drain(
     directory: appended in append and update mode (update mode keeps
     every emission of a key, one per batch), replacing it in complete
     mode. Whatever ``each`` persisted is released after the write. The
-    checkpoint lives under the staging root too; it and the ``staged``
-    directories the stream reads are deleted once the run has ended,
-    whether it succeeded or not. ``confs`` are set on the caller's session
-    only for the length of ``start()`` (see :func:`replay`).
+    checkpoint, under the staging root too, and those ``inputs`` that lie
+    under it are deleted once the run has ended, succeeded or not; a
+    table streamed in place is never touched. ``confs`` are set on the
+    caller's session only for the length of ``start()`` (see
+    :func:`replay`).
 
     An empty input staged by :func:`stage` is still one file, so it runs
     one empty micro-batch, whose write leaves a file with the result's
-    columns: the read-back is an empty frame, not a missing directory.
-    """
+    columns: the read-back is an empty frame, not a missing directory."""
     spark = frame.sparkSession
     out, ckpt = session_staging_dir("out"), session_staging_dir("ckpt")
     write_mode = "overwrite" if mode == "complete" else "append"
@@ -148,21 +170,21 @@ def drain(
             )
         q.awaitTermination()
     finally:
-        for path in [*staged, ckpt]:
-            shutil.rmtree(path, ignore_errors=True)
+        for path in [*inputs, ckpt]:
+            if os.path.commonpath([_ROOT, os.path.abspath(path)]) == _ROOT:
+                shutil.rmtree(path, ignore_errors=True)
     return spark.read.schema(written[0]).parquet(out)
 
 
 def replay(
     frame: DataFrame,
     mode: str,
-    staged: list[str],
+    inputs: list[str],
     rows_per_store: int = ROWS_PER_STORE,
 ) -> DataFrame:
     """Run the stateful streaming ``frame`` through :func:`drain` with its
-    state sized to the input: the footer row count of the ``staged``
-    directories (from :func:`stage`) sets the state stores
-    (:func:`replay_width` with ``rows_per_store``).
+    state sized to the footer row count of the ``inputs`` it streams (a
+    path listed twice counts twice) by :func:`replay_width`.
 
     The stream runs without no-data micro-batches. Such a batch only
     advances the watermark: it evicts state (which the checkpoint,
@@ -185,9 +207,9 @@ def replay(
     shuffle width of every job their operator runs on a batch.
     """
     spark = frame.sparkSession
-    n_rows = sum(parquet_rows(path) for path in staged)
+    n_rows = sum(parquet_rows(path) for path in inputs)
     confs = {
         WIDTH: str(replay_width(spark, n_rows, rows_per_store)),
         NO_DATA_BATCHES: "false",
     }
-    return drain(frame, mode, staged, confs=confs)
+    return drain(frame, mode, inputs, confs=confs)

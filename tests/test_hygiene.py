@@ -151,3 +151,66 @@ def test_cli_scrub(spark, tmp_path):
     assert back[1].n_phone == 1
     assert back[1].redacted == "call <PHONE> now"
     assert back[2].redacted == "nothing sensitive"
+
+
+# Texts whose segmentation has an edge: a tab or newline at either end
+# leaves an empty first or last token (``trim`` strips spaces only).
+SEGMENT_TEXTS = [
+    "\tlead tab",
+    "trailing newline\n",
+    "\tboth ends a b c d e f\n",
+    "",
+    None,
+    "t0 t1 t2 t3 t4 t5 t6 t7",
+    "t0 t1 t2 t3 t4 t5 t6 t7 t8 t9 t10 t11 t12 t13 t14 t15",
+    "t0 t1 t2 t3 t4 t5 t6 t7 ",
+    "t0 t1 t2 t3 t4 t5 t6 t7\t",
+    "héllo wörld ñandú 日本語 テキスト ключ κλειδί šum đak",
+    "\n",
+    "Mixed\t\tCASE  and\r\nbreaks",
+]
+
+
+def test_line_segments_match_split_slice_reference(spark):
+    """The regex segmenter equals the split/slice/array_join reference
+    segment for segment, byte for byte."""
+    from gov_ec_pipeline_etl_spark.operators.hygiene import line_segments
+
+    docs = spark.createDataFrame(
+        list(enumerate(SEGMENT_TEXTS)), "doc_id int, text string"
+    )
+    norm = F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
+    toks = F.split(norm, " ")
+    nseg = F.ceil(F.size(toks) / F.lit(8.0)).cast("bigint")
+    reference = F.transform(
+        F.sequence(F.lit(0).cast("bigint"), nseg - 1),
+        lambda i: F.array_join(F.slice(toks, (i * 8 + 1).cast("int"), 8), " "),
+    )
+    rows = docs.select(
+        "text", reference.alias("ref"), line_segments(norm, 8).alias("seg")
+    ).collect()
+    assert len(rows) == len(SEGMENT_TEXTS)
+    for r in rows:
+        assert r.seg == r.ref, repr(r.text)
+    by_text = {r.text: r.seg for r in rows}
+    assert by_text["\tlead tab"] == [" lead tab"]
+    assert by_text["\tboth ends a b c d e f\n"] == [" both ends a b c d e", "f "]
+    assert by_text[None] is None and by_text[""] == [""]
+
+
+def test_u46_build_and_explain_start_no_job(spark):
+    """Building u46's plan and explaining it run no Spark job."""
+    from gov_ec_pipeline_etl_spark.plans import all_queries
+    from gov_ec_pipeline_etl_spark.plans.util import T
+    from tests.conftest import SF_SMOKE
+
+    T(spark, SF_SMOKE, "documents")  # the schema read may start a job once
+    sc = spark.sparkContext
+    sc.setJobGroup("u46-build", "u46 plan construction")
+    try:
+        all_queries()["u46_line_dedup"].spark(spark, SF_SMOKE).explain()
+        jobs = sc.statusTracker().getJobIdsForGroup("u46-build")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert jobs == []

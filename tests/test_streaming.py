@@ -9,6 +9,7 @@ import os
 from gov_ec_pipeline_etl_spark.streaming.events import (
     run_incremental_file_stream,
 )
+from gov_ec_pipeline_etl_spark.tables import parquet_rows
 from tests.conftest import SF_SMOKE
 
 
@@ -368,6 +369,9 @@ def test_st03_runs_one_micro_batch_on_one_store(spark, monkeypatch):
     (q,) = queries
     progress = q.recentProgress
     assert len(progress) == 1
+    # both sources read the events file, and nothing else in its directory
+    events = os.path.join(SF_SMOKE, "events.parquet")
+    assert progress[0].numInputRows == 2 * parquet_rows(events)
     ops = progress[0].stateOperators
     assert ops and all(op.numShufflePartitions == 1 for op in ops)
 
@@ -392,3 +396,86 @@ def test_one_stream_write_loop_and_no_memory_sink():
     assert memory == []
     assert loops == {"streaming/staging.py", "sinks/upsert.py"}
 
+
+def test_in_place_replays_leave_the_table_alone(spark):
+    """st01, st03 and v01 stream the events file itself: it keeps its
+    size and mtime, and nothing is added next to it."""
+    from gov_ec_pipeline_etl_spark.plans import all_queries
+
+    events = os.path.join(SF_SMOKE, "events.parquet")
+    before = os.stat(events)
+    listing = sorted(os.listdir(SF_SMOKE))
+    qs = all_queries()
+    for name in ("st01_tumbling_window_stream", "st03_streaming_dedup",
+                 "v01_stream_stream_join"):
+        assert qs[name].spark(spark, SF_SMOKE).count() == _oracle_rows(name)
+    after = os.stat(events)
+    assert (after.st_size, after.st_mtime_ns) == (before.st_size, before.st_mtime_ns)
+    assert sorted(os.listdir(SF_SMOKE)) == listing
+
+
+def test_drain_keeps_inputs_outside_the_staging_root(spark, tmp_path):
+    """``drain`` deletes a staged input, never a path it was handed that
+    lies outside the staging root."""
+    from gov_ec_pipeline_etl_spark.streaming.staging import replay, stage
+
+    src = str(tmp_path / "src")
+    spark.range(5).withColumnRenamed("id", "k").write.parquet(src)
+    files = sorted(os.listdir(src))
+    outside = spark.readStream.schema("k bigint").parquet(src)
+    staged_stream, staged = stage(spark.range(3).withColumnRenamed("id", "k"), "kept")
+    out = replay(outside.unionByName(staged_stream).dropDuplicates(["k"]),
+                 "append", [src, staged])
+    assert out.count() == 5
+    assert sorted(os.listdir(src)) == files
+    assert not os.path.exists(staged)
+
+
+def test_current_events_leave_nanos_conf_unset(spark):
+    """Reading current-generation events (micros) sets no legacy nanos
+    conf on the caller's session, in batch or as a stream."""
+    from gov_ec_pipeline_etl_spark.plans.util import NANOS_AS_LONG, T
+    from gov_ec_pipeline_etl_spark.streaming.staging import table_stream
+
+    s = spark.newSession()
+    assert s.conf.get(NANOS_AS_LONG, None) is None
+    assert T(s, SF_SMOKE, "events").count() == parquet_rows(
+        os.path.join(SF_SMOKE, "events.parquet")
+    )
+    table_stream(s, SF_SMOKE, "events")
+    assert s.conf.get(NANOS_AS_LONG, None) is None
+
+
+def test_nanos_events_read_as_truncated_micros(spark, tmp_path):
+    """An events file storing INT64 TIMESTAMP(NANOS) still reads, in
+    batch and streamed in place, with ts truncated to microseconds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyspark.sql.functions as F
+
+    from gov_ec_pipeline_etl_spark.plans.util import T
+    from gov_ec_pipeline_etl_spark.streaming.events import (
+        run_tumbling_window_stream,
+        tumbling_window_agg,
+    )
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_000_999_999_999, 1_700_003_600_000_000_001]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+            "user_id": pa.array([7, 7, 8], pa.int64()),
+            "event_type": ["click", "click", "purchase"],
+            "value": [1.0, 2.0, 3.0],
+            "props": ["", "", ""],
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type == pa.timestamp("ns")
+    s = spark.newSession()
+    events = T(s, str(tmp_path), "events")
+    assert dict(events.dtypes)["ts"] == "timestamp"
+    micros = [r.us for r in events.select(F.unix_micros("ts").alias("us")).orderBy("us").collect()]
+    assert micros == [n // 1000 for n in ns]
+    streamed = run_tumbling_window_stream(s, str(tmp_path))
+    assert sorted(streamed.collect()) == sorted(tumbling_window_agg(events).collect())
