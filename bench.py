@@ -37,6 +37,7 @@ import time
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO_ROOT)
 
+from gov_ec_pipeline_etl_spark.caching import unpersist_inputs  # noqa: E402
 from gov_ec_pipeline_etl_spark.plans import all_queries  # noqa: E402
 from gov_ec_pipeline_etl_spark.session import get_spark  # noqa: E402
 
@@ -72,13 +73,15 @@ def main() -> None:
     # heaviest query here).
     def run_once(q) -> float:
         t0 = time.perf_counter()
-        q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        df = q.spark(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
         dt = round(time.perf_counter() - t0, 3)
-        # inter-query quiesce, outside the timed window: clear persisted
+        # inter-query quiesce, outside the timed window: release staged
         # sketch tables AND force a driver GC so Spark's ContextCleaner
         # releases accumulated broadcasts/shuffle files. Without it one
         # heavy query's garbage taxes the NEXT query's measurement
         # (observed 4 s -> 77 s on d02 right after u12's band joins).
+        unpersist_inputs(df)
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
         return dt

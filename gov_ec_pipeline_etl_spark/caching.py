@@ -1,18 +1,20 @@
-"""One obvious tool for the persisted-input handle convention.
+"""One materialization primitive: :func:`stage`.
 
-Several bucketed operators (LSH band tables, DF-cut inverted indexes)
-persist an intermediate DataFrame so the candidate self-join reads a
-cached leaf instead of re-evaluating an expensive kernel. The persisted
-frame outlives the call — Spark caching is session-scoped — so the
-operator attaches the handles to the *returned* DataFrame and the
-caller releases them after its consuming action.
+An intermediate that several consumers read (both sides of a
+self-join, every round of an iterative loop, several aggregates over
+one expensive kernel) is staged: ``stage(df)`` marks ``df`` for caching
+and returns it. It runs no job. The cache fills during the first action
+that reads the frame, so building or explaining a plan never launches
+one, and the query keeps one lazy plan.
 
-Operators call :func:`hold`; consumers call :func:`unpersist_inputs`
-or wrap the consumption in :func:`released`. The attribute itself
-(``_persisted_inputs``) is a plain Python attribute on the DataFrame
-wrapper object: it is LOST on any further DataFrame transformation
-(``df.where(...)`` returns a new wrapper), so callers must release
-before transforming, or keep their own reference to the handle list.
+Spark's cache is session-scoped and outlives the call that staged it,
+so :func:`stage` records each frame under its ``sparkSession``. The
+consumer of a result releases every stage recorded for the result's
+session with :func:`unpersist_inputs`, or wraps its action in
+:func:`released`. A foreachBatch micro-batch runs on the stream's
+cloned session (a session object of its own), so releasing a batch's
+result frees only what that batch staged; with nothing staged the
+release makes no Spark call.
 """
 
 from __future__ import annotations
@@ -20,30 +22,28 @@ from __future__ import annotations
 import contextlib
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-_ATTR = "_persisted_inputs"
+_STAGED: dict[SparkSession, list[DataFrame]] = {}
 
 
-def hold(out: DataFrame, *persisted: DataFrame) -> DataFrame:
-    """Attach persisted-input handles to a result DataFrame (returns it)."""
-    setattr(out, _ATTR, list(persisted))
-    return out
+def stage(df: DataFrame) -> DataFrame:
+    """Persist ``df`` lazily and record it under its session (returns it)."""
+    _STAGED.setdefault(df.sparkSession, []).append(df.persist())
+    return df
 
 
 def unpersist_inputs(df: DataFrame) -> None:
-    """Release every persisted input attached to ``df`` (idempotent)."""
-    for p in getattr(df, _ATTR, []):
+    """Release every stage recorded for ``df``'s session (idempotent)."""
+    for staged in _STAGED.pop(df.sparkSession, []):
         with contextlib.suppress(Exception):
-            p.unpersist()
-    with contextlib.suppress(AttributeError):
-        delattr(df, _ATTR)
+            staged.unpersist()
 
 
 @contextlib.contextmanager
 def released(df: DataFrame) -> Iterator[DataFrame]:
     """``with released(op(...)) as result: result.collect()`` — consume a
-    bucketed operator's result and release its cached inputs on exit."""
+    result and release the stages of its session on exit."""
     try:
         yield df
     finally:

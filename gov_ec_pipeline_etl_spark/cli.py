@@ -231,7 +231,7 @@ def _bpe_cmd(args) -> int:
     fertility."""
     import pyspark.sql.functions as F
 
-    from gov_ec_pipeline_etl_spark.caching import released
+    from gov_ec_pipeline_etl_spark.caching import released, stage
     from gov_ec_pipeline_etl_spark.operators.bpe import apply_bpe, bpe_merges
     from gov_ec_pipeline_etl_spark.session import get_spark
 
@@ -266,15 +266,13 @@ def _bpe_cmd(args) -> int:
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
     )
-    seg = vocab.select(
-        "w", "cnt", apply_bpe("w", merges).alias("syms")
-    ).persist()
-    head = seg.orderBy(F.desc("cnt"), "w").limit(args.limit).collect()
-    stats = seg.agg(
-        (F.sum(F.size("syms") * F.col("cnt")) / F.sum("cnt")).alias("f"),
-        F.count("*").alias("types"),
-    ).collect()[0]
-    seg.unpersist()
+    seg = vocab.select("w", "cnt", apply_bpe("w", merges).alias("syms"))
+    with released(stage(seg)) as seg:
+        head = seg.orderBy(F.desc("cnt"), "w").limit(args.limit).collect()
+        stats = seg.agg(
+            (F.sum(F.size("syms") * F.col("cnt")) / F.sum("cnt")).alias("f"),
+            F.count("*").alias("types"),
+        ).collect()[0]
     for r in head:
         print(json.dumps(r.asDict(), default=str))
     print(

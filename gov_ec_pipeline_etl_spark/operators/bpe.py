@@ -26,7 +26,7 @@ as sequential BPE does: ``(a)(a)(a)`` under merge ``a+a`` becomes
 
 At 100 TB the corpus scan is the only data-scale stage (an
 embarrassingly-parallel token explode + hash aggregate); the iteration
-state is the word-type table (vocab-bounded, persisted once) and each
+state is the word-type table (vocab-bounded, staged once) and each
 step is one explode + one aggregate over it, with the argmax row
 broadcast. Lineage across steps stays shallow because the substitution
 is a single expression per step over the cached vocabulary.
@@ -39,7 +39,7 @@ from functools import reduce
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from gov_ec_pipeline_etl_spark.caching import hold
+from gov_ec_pipeline_etl_spark.caching import stage
 
 # Pair stream over a symbol array: index-aware transform pairs each
 # sliced element with its successor; slice length 0 (single-symbol
@@ -95,23 +95,19 @@ def _apply_merge(vocab: DataFrame, best: DataFrame) -> DataFrame:
     )
 
 
-def _learn(
-    vocab: DataFrame, steps: int
-) -> tuple[list[DataFrame], DataFrame, list[DataFrame]]:
-    """Run ``steps`` merge iterations over a persisted encoded vocab;
-    returns (per-step argmax rows, fully-substituted vocab, persisted
-    handles)."""
-    held: list[DataFrame] = []
+def _learn(vocab: DataFrame, steps: int) -> tuple[list[DataFrame], DataFrame]:
+    """Run ``steps`` merge iterations over a staged encoded vocab;
+    returns (per-step argmax rows, fully-substituted vocab). Each step's
+    1-row argmax is staged: it is consumed twice (output row +
+    substitution input)."""
     out_rows = []
     cur = vocab
     for step in range(1, steps + 1):
-        best = (
+        best = stage(
             _pair_counts(cur)
             .orderBy(F.desc("pair_count"), "merge_left", "merge_right")
             .limit(1)
-            .persist()
         )
-        held.append(best)
         out_rows.append(
             best.select(
                 F.lit(step).alias("step"),
@@ -121,21 +117,18 @@ def _learn(
             )
         )
         cur = _apply_merge(cur, best)
-    return out_rows, cur, held
+    return out_rows, cur
 
 
 def bpe_merges(docs: DataFrame, text_col: str = "text", steps: int = 4) -> DataFrame:
     """Learn ``steps`` BPE merges; returns (step, merge_left, merge_right,
     pair_count) — one row per learned merge in order.
 
-    The vocabulary table and each step's 1-row argmax are persisted
-    (the argmax is consumed twice: output row + substitution input);
-    release with ``caching.released``/``unpersist_inputs``.
+    The vocabulary table and each step's argmax are staged; release with
+    ``caching.released``/``unpersist_inputs``.
     """
-    vocab = _encoded_vocab(docs, text_col).persist()
-    out_rows, _cur, held = _learn(vocab, steps)
-    out = reduce(DataFrame.unionByName, out_rows)
-    return hold(out, vocab, *held)
+    out_rows, _cur = _learn(stage(_encoded_vocab(docs, text_col)), steps)
+    return reduce(DataFrame.unionByName, out_rows)
 
 
 def bpe_segmented_vocab(
@@ -146,17 +139,16 @@ def bpe_segmented_vocab(
     row per word type with its BPE symbol count. The map is
     vocab-bounded, so downstream consumers join it back to the token
     stream (broadcast at small vocabularies, hash join at web-scale
-    ones). Persisted handles ride the result; release after consuming.
+    ones). Its stages are released after consuming, as for
+    :func:`bpe_merges`.
     """
-    vocab = _encoded_vocab(docs, text_col).persist()
-    _rows, cur, held = _learn(vocab, steps)
-    out = cur.select(
+    _rows, cur = _learn(stage(_encoded_vocab(docs, text_col)), steps)
+    return cur.select(
         F.translate("ws", "()", "").alias("w"),
         F.size(F.regexp_extract_all("ws", F.lit(r"\(([^()]+)\)"), 1)).alias(
             "n_syms"
         ),
     )
-    return hold(out, vocab, *held)
 
 
 def apply_bpe(

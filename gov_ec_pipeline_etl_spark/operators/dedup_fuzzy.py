@@ -17,7 +17,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from gov_ec_pipeline_etl_spark.caching import hold
+from gov_ec_pipeline_etl_spark.caching import released, stage
 from gov_ec_pipeline_etl_spark.functions.hashing import hash64
 
 
@@ -224,21 +224,21 @@ def substring_runs(
     # pair); the output columns never contain the anchor itself.
     sp = sp.select("id", "pos", hash64(F.col("s"), 0, portable=False).alias("s"))
     # anchor-keyed cut in ONE aggregate: cross-document (min!=max id)
-    # and occurrence-bounded. Persisted — it feeds both sides of the
+    # and occurrence-bounded. Staged — it feeds both sides of the
     # candidate self-join.
     freq = sp.groupBy("s").agg(
         F.count(F.lit(1)).alias("occ"),
         F.min("id").alias("mn"),
         F.max("id").alias("mx"),
     )
-    spf = (
+    spf = stage(
         sp.join(
             freq.where(
                 (F.col("occ") <= max_occ) & (F.col("mn") != F.col("mx"))
             ).select("s"),
             "s",
         )
-    ).persist()
+    )
     a = spf.select(
         F.col("id").alias("id_a"), F.col("pos").alias("pos_a"), "s"
     )
@@ -266,7 +266,7 @@ def substring_runs(
         .where(F.col("run_tokens") >= min_len)
         .select("id_a", "id_b", "start_a", "start_b", "run_tokens")
     )
-    return hold(runs, spf)
+    return runs
 
 
 def substring_run_pairs(
@@ -280,12 +280,11 @@ def substring_run_pairs(
     """Per-document-PAIR summary of :func:`substring_runs`:
     (id_a, id_b, n_runs, max_run_tokens, dup_tokens)."""
     runs = substring_runs(df, id_col, text_col, k, min_len, max_occ)
-    out = runs.groupBy("id_a", "id_b").agg(
+    return runs.groupBy("id_a", "id_b").agg(
         F.count(F.lit(1)).alias("n_runs"),
         F.max("run_tokens").alias("max_run_tokens"),
         F.sum("run_tokens").alias("dup_tokens"),
     )
-    return hold(out, *getattr(runs, "_persisted_inputs", []))
 
 
 def substring_dedup_cut(
@@ -340,7 +339,7 @@ def substring_dedup_cut(
         F.size(F.split(norm, " ")).cast("long").alias("n_tokens"),
     )
     kept = F.col("n_tokens") - F.coalesce("removed_tokens", F.lit(0))
-    out = (
+    return (
         toks.join(isl, "id", "left")
         .select(
             "id",
@@ -358,7 +357,6 @@ def substring_dedup_cut(
             ).alias("kept_ratio"),
         )
     )
-    return hold(out, *getattr(runs, "_persisted_inputs", []))
 
 
 def jaccard_verify(
@@ -441,25 +439,38 @@ def minhash_sketch(
     k: int = 3,
     portable: bool = True,
 ) -> DataFrame:
-    """(id, h60) shingle sketch, persisted AND materialized.
+    """(id, h60) shingle sketch, staged (``caching.stage``).
 
-    Hash each distinct shingle ONCE to its 60-bit identity, then drop
-    the strings: the persisted sketch is smaller and joins on bigints.
-    Materialized before fan-out because a lazily-persisted table
-    consumed by concurrent stages of one job gets racily recomputed per
-    branch (measured ~3 s extra at sf0.1) — one count() is the cache
-    barrier (cluster equivalent: write the sketch table out once).
+    Each distinct shingle is hashed ONCE to its 60-bit identity and the
+    strings are dropped: the cached sketch is smaller and joins on
+    bigints. Every consumer (signature, bands, verification sets) reads
+    the one cached copy; the cluster-scale form writes the sketch table
+    out once (``write_sketch_table``)."""
+    return stage(shingle_hashes(df, id_col, text_col, k, portable))
 
-    The returned frame stays cached until the caller unpersists it
-    (minhash_lsh_pairs does; other long-lived callers should unpersist
-    after their consuming action or ``spark.catalog.clearCache()``)."""
-    sh = (
-        shingle_rows(df, id_col, text_col, k)
-        .select("id", hash64(F.col("s"), 0, portable).alias("h60"))
-        .persist()
+
+def shingle_hashes(
+    df: DataFrame, id_col: str, text_col: str, k: int = 3, portable: bool = True
+) -> DataFrame:
+    """(id, h60): each document's distinct k-word shingles as 60-bit
+    hashes — the one sketch expression every MinHash and n-gram path
+    (corpus, arrivals, stored index) is built from."""
+    return shingle_rows(df, id_col, text_col, k).select(
+        "id", hash64(F.col("s"), 0, portable).alias("h60")
     )
-    sh.count()
-    return sh
+
+
+def head_shingles(sh: DataFrame, max_df: int) -> DataFrame:
+    """The document-frequency head of a (id, h60) sketch: shingle hashes
+    in more than ``max_df`` documents. Heavy hitters by definition, so
+    the set is small (at most |rows| / max_df values) and broadcastable
+    at any corpus size; the count-only aggregate is map-side partial."""
+    return (
+        sh.groupBy("h60")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .where(F.col("df") > max_df)
+        .select("h60")
+    )
 
 
 def minhash_signature(sh: DataFrame, num_hashes: int = 12) -> DataFrame:
@@ -574,9 +585,7 @@ def minhash_lsh_pairs(
         .where(F.size("ids") >= 2)
     )
     cand = _bucket_pairs(buckets)
-    out = jaccard_verify(cand, sh.select("id", "h60"), jaccard_threshold, on="h60")
-    # caller releases via caching.unpersist_inputs / released()
-    return hold(out, sh)
+    return jaccard_verify(cand, sh.select("id", "h60"), jaccard_threshold, on="h60")
 
 
 def minhash_estimate_vs_exact(
@@ -595,7 +604,7 @@ def minhash_estimate_vs_exact(
     num_hashes) next to the exact shingle Jaccard, with the absolute
     error. The operational dial a 100 TB dedup run needs when choosing
     num_hashes/bands: measured estimator error on the corpus itself,
-    computed in-engine from the SAME persisted sketch the dedup path
+    computed in-engine from the SAME staged sketch the dedup path
     uses (one shingle scan; signature and verify both reuse it —
     no second pass over the text).
 
@@ -614,10 +623,9 @@ def minhash_estimate_vs_exact(
         raise ValueError("max_bucket must be >= 2 (a bucket needs a pair)")
     sh = minhash_sketch(df, id_col, text_col, k, portable)
     # ONE signature aggregation: band keys and the estimator columns
-    # both derive from this persisted frame (the naive spelling pays
+    # both derive from this staged frame (the naive spelling pays
     # the sketch-wide min-aggregate shuffle twice).
-    sig = minhash_signature(sh, num_hashes).persist()
-    sig.count()
+    sig = stage(minhash_signature(sh, num_hashes))
     banded = band_keys_from_signature(sig, num_hashes, bands)
     if max_bucket is not None:
         w = Window.partitionBy("band_idx", "band_key").orderBy("id")
@@ -645,7 +653,7 @@ def minhash_estimate_vs_exact(
     est_matches = sum(
         (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(num_hashes)
     )
-    out = (
+    return (
         pairs.join(sig_a, "id_a")
         .join(sig_b, "id_b")
         .select(
@@ -668,7 +676,6 @@ def minhash_estimate_vs_exact(
             ).alias("abs_err"),
         )
     )
-    return hold(out, sh, sig)
 
 
 def _bucket_pairs(buckets: DataFrame) -> DataFrame:
@@ -800,11 +807,9 @@ def simhash_pairs(
     Hamming distance < chunks must collide on ≥1 chunk); verified by
     exact Hamming distance ≤ ``max_hamming``... candidate recall for
     distances ≥ chunks is partial by design (standard chunk-LSH)."""
-    fp = simhash_table(df, id_col, text_col, portable).persist()
-    # persisted AND materialized: reused by both self-join sides;
-    # fingerprinting is the hot stage (see the cache-barrier note in
-    # minhash_lsh_pairs)
-    fp.count()
+    # staged: both self-join sides read it; fingerprinting is the hot
+    # stage
+    fp = stage(simhash_table(df, id_col, text_col, portable))
     return fingerprint_chunk_pairs(fp, max_hamming, chunks)
 
 
@@ -822,8 +827,7 @@ def fingerprint_chunk_pairs(
     < chunks must collide on >=1 chunk); each pair is emitted from its
     FIRST matching chunk only (rowwise bit math, no dedup shuffle) and
     verified at exact Hamming <= ``max_hamming`` before any exchange.
-    The caller should persist+materialize ``fp`` — both self-join sides
-    read it."""
+    The caller should stage ``fp`` — both self-join sides read it."""
     chunk_bits = bits // chunks
     chunked = fp.select(
         "id",
@@ -871,7 +875,7 @@ def fingerprint_chunk_pairs(
 
 def simhash_diversity(fp: DataFrame) -> float:
     """Distinct-fingerprint ratio of a ``simhash_table`` result — the
-    cheap density statistic (one aggregate over the already-persisted
+    cheap density statistic (one aggregate over the already-staged
     fp table). Low diversity means doc-level pair emission is
     O(n²·(1−diversity)): the sf1 scale-proof measured 130.8M pairs from
     100k docs on the 31-word synthetic vocabulary."""
@@ -943,8 +947,8 @@ def fingerprint_group_pairs(
     its row count (unit-tested). Output is bounded by
     distinct-fingerprint candidate pairs, independent of corpus size."""
     chunk_bits = bits // chunks
-    groups = fp.groupBy("fp").agg(F.count(F.lit(1)).alias("n_docs")).persist()
-    groups.count()  # materialization barrier: feeds diag + both join sides
+    # staged: feeds the diagonal and both join sides
+    groups = stage(fp.groupBy("fp").agg(F.count(F.lit(1)).alias("n_docs")))
     diag = groups.where(F.col("n_docs") >= 2).select(
         F.col("fp").alias("fp_a"),
         F.col("fp").alias("fp_b"),
@@ -998,7 +1002,7 @@ def fingerprint_group_pairs(
             (F.col("a.n_docs") * F.col("b.n_docs")).alias("n_pairs"),
         )
     )
-    return hold(diag.unionByName(cross), groups)
+    return diag.unionByName(cross)
 
 
 # --- n-gram Jaccard via inverted index -----------------------------------
@@ -1030,31 +1034,19 @@ def ngram_jaccard_pairs(
     negligible-collision argument as the MinHash path): bigint keys make
     the inverted-index groupBy and the wide verification joins shuffle a
     fraction of the string bytes."""
-    sh = (
-        shingle_rows(df, id_col, text_col, k)
-        .select("id", hash64(F.col("s"), 0, portable).alias("h60"))
-        .persist()
+    return _jaccard_from_kept(
+        _df_cut(minhash_sketch(df, id_col, text_col, k, portable), max_df),
+        jaccard_threshold,
     )
-    sh.count()  # cache barrier before fan-out (see minhash_lsh_pairs)
-    # Head-shingle set: heavy hitters by definition, so it is SMALL
-    # (≤ |corpus shingle occurrences| / max_df distinct values) —
-    # broadcastable at any corpus size, and the count-only aggregate is
-    # map-side partial. The anti-join then prunes sh BEFORE the
-    # collect_list index build, so no bucket ever materializes more than
-    # max_df ids. ``kept`` is persisted in its own right (and the raw
-    # rows released): it feeds two consumers, and an unpersisted
-    # anti-join lineage would re-run the head aggregate per consumer.
-    head = (
-        sh.groupBy("h60")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") > max_df)
-        .select("h60")
-    )
-    kept = sh.join(F.broadcast(head), "h60", "left_anti").persist()
-    kept.count()
-    sh.unpersist()
-    # caller releases via caching.unpersist_inputs / released()
-    return hold(_jaccard_from_kept(kept, jaccard_threshold), kept)
+
+
+def _df_cut(sh: DataFrame, max_df: int) -> DataFrame:
+    """A staged sketch minus its head shingles, itself staged: the
+    broadcast anti-join prunes the sketch before any index build, so no
+    shingle key carries more than ``max_df`` ids, and the cut feeds
+    several consumers (both self-join sides, the set sizes) that would
+    each re-run the head aggregate over an uncached lineage."""
+    return stage(sh.join(F.broadcast(head_shingles(sh, max_df)), "h60", "left_anti"))
 
 
 def _jaccard_from_kept(kept: DataFrame, jaccard_threshold: float) -> DataFrame:
@@ -1095,9 +1087,9 @@ def _jaccard_from_kept(kept: DataFrame, jaccard_threshold: float) -> DataFrame:
 def write_sketch_table(sh: DataFrame, path: str) -> None:
     """Materialize a (id, h60) shingle sketch as a stored parquet table.
 
-    This is the cluster-scale form of minhash_sketch's persist+count
-    barrier: the corpus sketch is computed ONCE when a corpus snapshot
-    is built and every later ingest batch reads it back — no per-batch
+    This is the cluster-scale form of minhash_sketch's staged sketch:
+    the corpus sketch is computed ONCE when a corpus snapshot is built
+    and every later ingest batch reads it back — no per-batch
     corpus re-shingling, no corpus self-join. Repartitioned on id so an
     incremental band join shuffles only the (small) arrival side when
     the table is read back co-partitioned."""
@@ -1120,12 +1112,13 @@ def build_sketch_index(
     store it under ``path/sketch`` with self-describing ``_meta.json``
     (same lifecycle contract as the n-gram index: build →
     probe/ingest → compact, all CLI-operable)."""
-    sh = minhash_sketch(df, id_col, text_col, k, portable)
     # ids stored as bigint so the pinned read schema holds across builds
     write_sketch_table(
-        sh.select(F.col("id").cast("long").alias("id"), "h60"), path + "/sketch"
+        shingle_hashes(df, id_col, text_col, k, portable).select(
+            F.col("id").cast("long").alias("id"), "h60"
+        ),
+        path + "/sketch",
     )
-    sh.unpersist()
     _write_index_meta(path, {"kind": "minhash", "k": k, "portable": portable})
 
 
@@ -1149,12 +1142,13 @@ def append_to_sketch_index(
     recover_index_dir(path + "/sketch")  # append into a fresh dir would
     # otherwise bury a crash-stranded corpus under a batch-only index
     meta = read_index_meta(path)
-    sh = minhash_sketch(arrivals, id_col, text_col, meta["k"], meta["portable"])
-    n = sh.count()
-    sh.select(F.col("id").cast("long").alias("id"), "h60").repartition(
-        "id"
-    ).write.mode("append").parquet(path + "/sketch")
-    sh.unpersist()
+    with released(
+        minhash_sketch(arrivals, id_col, text_col, meta["k"], meta["portable"])
+    ) as sh:
+        n = sh.count()
+        sh.select(F.col("id").cast("long").alias("id"), "h60").repartition(
+            "id"
+        ).write.mode("append").parquet(path + "/sketch")
     return n
 
 
@@ -1210,7 +1204,7 @@ def incremental_neardup_against(
     )
     sz_new = sh_new.groupBy("id").agg(F.count(F.lit(1)).alias("sz_a"))
     sz_corpus = stored_sketch.groupBy("id").agg(F.count(F.lit(1)).alias("sz_b"))
-    out = (
+    return (
         inter.join(sz_new.withColumnsRenamed({"id": "id_a"}), "id_a")
         .join(sz_corpus.withColumnsRenamed({"id": "id_b"}), "id_b")
         .withColumn(
@@ -1224,7 +1218,6 @@ def incremental_neardup_against(
             F.round("jaccard", 6).alias("jaccard"),
         )
     )
-    return hold(out, sh_new)
 
 
 # --- stored n-gram inverted index ----------------------------------------
@@ -1258,29 +1251,18 @@ def write_ngram_index(
     broadcastable at any corpus size) so incremental batches can apply
     the SAME cut to their side and keep Jaccard semantics identical to
     the full-corpus query."""
-    sh = (
-        shingle_rows(df, id_col, text_col, k)
-        .select("id", hash64(F.col("s"), 0, portable).alias("h60"))
-        .persist()
-    )
-    sh.count()
-    head = (
-        sh.groupBy("h60")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") > max_df)
-        .select("h60")
-    )
-    head.write.mode("overwrite").parquet(path + "/head")
-    kept = sh.join(F.broadcast(head), "h60", "left_anti")
-    (
-        kept.select(F.col("id").cast("long").alias("id"), "h60")
-        .withColumn("hb", F.pmod("h60", F.lit(hash_dirs)))
-        .repartition("hb")
-        .write.mode("overwrite")
-        .partitionBy("hb")
-        .parquet(path + "/kept")
-    )
-    sh.unpersist()
+    with released(minhash_sketch(df, id_col, text_col, k, portable)) as sh:
+        head = head_shingles(sh, max_df)
+        head.write.mode("overwrite").parquet(path + "/head")
+        (
+            sh.join(F.broadcast(head), "h60", "left_anti")
+            .select(F.col("id").cast("long").alias("id"), "h60")
+            .withColumn("hb", F.pmod("h60", F.lit(hash_dirs)))
+            .repartition("hb")
+            .write.mode("overwrite")
+            .partitionBy("hb")
+            .parquet(path + "/kept")
+        )
     _write_index_meta(
         path,
         {
@@ -1335,19 +1317,18 @@ def append_to_ngram_index(
     recover_index_dir(path + "/kept")  # see append_to_sketch_index
     meta = read_index_meta(path)
     head = read_ngram_head(spark, path)
-    sh_new = (
-        shingle_rows(arrivals, id_col, text_col, meta["k"])
-        .select("id", hash64(F.col("s"), 0, meta["portable"]).alias("h60"))
-        .join(F.broadcast(head), "h60", "left_anti")
-        .select(F.col("id").cast("long").alias("id"), "h60")
-        .withColumn("hb", F.pmod("h60", F.lit(meta["hash_dirs"])))
-        .persist()
-    )
-    n = sh_new.count()
-    sh_new.repartition("hb").write.mode("append").partitionBy("hb").parquet(
-        path + "/kept"
-    )
-    sh_new.unpersist()
+    with released(
+        stage(
+            shingle_hashes(arrivals, id_col, text_col, meta["k"], meta["portable"])
+            .join(F.broadcast(head), "h60", "left_anti")
+            .select(F.col("id").cast("long").alias("id"), "h60")
+            .withColumn("hb", F.pmod("h60", F.lit(meta["hash_dirs"])))
+        )
+    ) as sh_new:
+        n = sh_new.count()
+        sh_new.repartition("hb").write.mode("append").partitionBy("hb").parquet(
+            path + "/kept"
+        )
     return n
 
 
@@ -1520,21 +1501,7 @@ def containment_pairs(
     docs) it generated ~600M join rows and ran >20 min in BOTH engines,
     the round-4 scale-proof's clearest lesson. Sets (and sizes) are the
     post-cut sets, consistently on both sides of the oracle."""
-    sh = (
-        shingle_rows(df, id_col, text_col, k)
-        .select("id", hash64(F.col("s"), 0, portable).alias("h60"))
-        .persist()
-    )
-    sh.count()
-    head = (
-        sh.groupBy("h60")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") > max_df)
-        .select("h60")
-    )
-    kept = sh.join(F.broadcast(head), "h60", "left_anti").persist()
-    kept.count()
-    sh.unpersist()
+    kept = _df_cut(minhash_sketch(df, id_col, text_col, k, portable), max_df)
     inter = (
         kept.alias("a")
         .join(kept.alias("b"), "h60")
@@ -1543,14 +1510,13 @@ def containment_pairs(
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     sizes = kept.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    out = (
+    return (
         inter.join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
         .join(sizes.withColumnsRenamed({"id": "id_b", "sz": "sz_b"}), "id_b")
         .withColumn("containment", F.col("inter") / F.least("sz_a", "sz_b"))
         .where(F.col("containment") >= threshold)
         .select("id_a", "id_b", F.round("containment", 6).alias("containment"))
     )
-    return hold(out, kept)
 
 
 def ngram_incremental_against_index(
@@ -1576,13 +1542,11 @@ def ngram_incremental_against_index(
     and never self-joined; per-batch work is linear in the batch plus
     the matched index rows."""
     head = read_ngram_head(spark, index_path)
-    sh_new = (
-        shingle_rows(arrivals, id_col, text_col, k)
-        .select("id", hash64(F.col("s"), 0, portable).alias("h60"))
-        .join(F.broadcast(head), "h60", "left_anti")
-        .persist()
+    sh_new = stage(
+        shingle_hashes(arrivals, id_col, text_col, k, portable).join(
+            F.broadcast(head), "h60", "left_anti"
+        )
     )
-    sh_new.count()
     corpus = read_ngram_index(spark, index_path)
     inter = (
         sh_new.withColumnsRenamed({"id": "new_id"})
@@ -1592,7 +1556,7 @@ def ngram_incremental_against_index(
     )
     sizes_new = sh_new.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     sizes_corpus = corpus.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    out = (
+    return (
         inter.join(
             sizes_new.withColumnsRenamed({"id": "new_id", "sz": "sz_a"}), "new_id"
         )
@@ -1607,4 +1571,3 @@ def ngram_incremental_against_index(
         .where(F.col("jaccard") >= threshold)
         .select("new_id", "corpus_id", F.round("jaccard", 6).alias("jaccard"))
     )
-    return hold(out, sh_new)

@@ -15,11 +15,11 @@ range-partition by the order key, per-range running sums, per-range
 totals roll up to a partition-count-scale offset table
 (driver-broadcast, like any catalog pruning list), global cumsum =
 local + offset. The bucket tag is ``spark_partition_id()`` over the
-range exchange, so the ONE materialization of that exchange is
-persisted and both consumers (the running-sum window and the totals
-aggregate) read the same cached assignment — without the barrier the
-two plan branches could instantiate independent RangePartitioners and
-disagree on boundaries. The result is invariant to wherever the
+range exchange, so that exchange is staged (``caching.stage``): the
+cache is built from ONE execution of it, and both consumers (the
+running-sum window and the totals aggregate) read the same assignment —
+uncached, the two plan branches could instantiate independent
+RangePartitioners and disagree on boundaries. The result is invariant to wherever the
 boundaries land, so it equals the global-window definition bit-for-bit
 — which is exactly what the DuckDB oracle runs.
 """
@@ -29,7 +29,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from gov_ec_pipeline_etl_spark.caching import hold
+from gov_ec_pipeline_etl_spark.caching import stage
 
 
 def pack_sequences(
@@ -46,9 +46,9 @@ def pack_sequences(
     Returns (id, n_tokens, first_bin, last_bin, bins_spanned) with
     0-based bins; ``bins_spanned - 1`` is the number of chop boundaries
     crossing the document. All integer arithmetic (``div``), no float
-    anywhere — bin indexes are exact at any corpus size. The persisted
-    bucket assignment follows the hold() convention (release after the
-    consuming action)."""
+    anywhere — bin indexes are exact at any corpus size. The bucket
+    assignment is staged (``caching.stage``); the consumer releases it
+    after its action."""
     if capacity < 1:
         raise ValueError(f"capacity must be >= 1, got {capacity}")
     norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
@@ -56,14 +56,14 @@ def pack_sequences(
         F.col(id_col).alias("id"),
         F.size(F.split(norm, " ")).cast("long").alias("n_tokens"),
     )
-    # persist the bucket assignment: _pid is a property of the PHYSICAL
+    # stage the bucket assignment: _pid is a property of the PHYSICAL
     # range exchange, so every consumer must read one materialization
     # of it (two independent branches could sample different range
     # boundaries and key offsets against mismatched buckets)
-    d = (
-        base.repartitionByRange(n_buckets, F.col("id"))
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+    d = stage(
+        base.repartitionByRange(n_buckets, F.col("id")).withColumn(
+            "_pid", F.spark_partition_id()
+        )
     )
     w_loc = (
         Window.partitionBy("_pid")
@@ -82,7 +82,7 @@ def pack_sequences(
             F.coalesce(F.sum("_tot").over(w_off), F.lit(0)).alias("_off"),
         )
     )
-    out = (
+    return (
         loc.join(F.broadcast(offs), "_pid")
         .withColumn("_cum", F.col("_loc") + F.col("_off"))
         .select(
@@ -95,4 +95,3 @@ def pack_sequences(
             ).alias("bins_spanned"),
         )
     )
-    return hold(out, d)

@@ -25,7 +25,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from gov_ec_pipeline_etl_spark.caching import hold
+from gov_ec_pipeline_etl_spark.caching import released, stage
 
 
 def as_double(vec: Column) -> Column:
@@ -345,19 +345,15 @@ def cosine_near_pairs(
     0.9994). Parallel (planted/scaled) duplicates share signs under
     every plane set, so banding never changes their result set.
 
-    The bucketed variants persist an intermediate projection that the
-    returned DataFrame reads from; it stays cached until released.
-    Long-lived sessions issuing many calls should unpersist after the
-    consuming action via the handle attached to the result
-    (``result._persisted_inputs``) or ``spark.catalog.clearCache()``
-    — the bench/test harnesses already clear between queries."""
+    The bucketed variants stage (``caching.stage``) the projection both
+    self-join sides read; the consumer releases it after its action
+    with ``caching.unpersist_inputs`` or ``caching.released``."""
     dim = vec_dim(df, vec_col)
     v = df.select(
         F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
     ).withColumn("n", l2_norm("v", dim))
     if bucketed and bands > 1:
-        v = v.persist()
-        v.count()
+        v = stage(v)
         planes_per_band = [
             hyperplanes(dim, n_planes, seed + 101 * b) for b in range(bands)
         ]
@@ -370,11 +366,10 @@ def cosine_near_pairs(
                 "band", "key"
             ),
         )
-        # persist the (id, band, key) rows (4 tiny rows per vector) so
+        # stage the (id, band, key) rows (4 tiny rows per vector) so
         # the self-join's two sides read a cached leaf instead of two
         # more Arrow round-trips
-        keyed = keyed.persist()
-        keyed.count()
+        keyed = stage(keyed)
         cand = (
             keyed.alias("x")
             .join(keyed.alias("y"), ["band", "key"])
@@ -395,7 +390,7 @@ def cosine_near_pairs(
             ),
             "id_b",
         )
-        out = (
+        return (
             fetched.select(
                 "id_a", "id_b",
                 (dot("va", "vb", dim) / (F.col("na") * F.col("nb"))).alias("cos"),
@@ -403,22 +398,19 @@ def cosine_near_pairs(
             .where(F.col("cos") >= threshold)
             .select("id_a", "id_b", F.round("cos", 3).alias("cos_r"))
         )
-        return hold(out, v, keyed)
     if bucketed:
         planes = hyperplanes(dim, n_planes, seed)
-        # Materialize the (id, v, norm, bucket) projection once: both
-        # sides of the self-join read the cache instead of re-scanning
-        # the source and re-evaluating the norm/bucket kernels (25%
-        # at sf0.1; at corpus scale it halves the scan volume — the
-        # cluster form writes this projection out, as minhash_sketch
-        # documents). count() is the same materialization barrier.
+        # Stage the (id, v, norm, bucket) projection: both sides of the
+        # self-join read the cache instead of re-scanning the source and
+        # re-evaluating the norm/bucket kernels (25% at sf0.1; at corpus
+        # scale it halves the scan volume — the cluster form writes this
+        # projection out, as minhash_sketch documents).
         # Bucket keys via the same Arrow matmul as the banded path
         # (constant-size plan; the literal kernel stays only where an
         # oracle replays its bit math, i.e. s03's lsh_cosine_topk).
-        v = v.withColumn(
-            "bucket", band_keys_udf([planes])(F.col("v")).getItem(0)
-        ).persist()
-        v.count()
+        v = stage(
+            v.withColumn("bucket", band_keys_udf([planes])(F.col("v")).getItem(0))
+        )
         joined = v.alias("a").join(
             v.alias("b"),
             (F.col("a.bucket") == F.col("b.bucket"))
@@ -426,7 +418,7 @@ def cosine_near_pairs(
         )
     else:
         joined = v.alias("a").join(v.alias("b"), F.col("a.id") < F.col("b.id"))
-    out = (
+    return (
         joined.select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
@@ -435,9 +427,6 @@ def cosine_near_pairs(
         .where(F.col("cos") >= threshold)
         .select("id_a", "id_b", F.round("cos", 3).alias("cos_r"))
     )
-    if bucketed:
-        hold(out, v)  # caller releases via caching.unpersist_inputs
-    return out
 
 
 def build_ivf_index(
@@ -533,11 +522,10 @@ def append_to_ivf(emb: DataFrame, spark, path: str,
             ),
             F.first("v").alias("v"),
         )
-        .persist()
     )
-    n = assigned.count()
-    assigned.write.mode("append").partitionBy("cent_id").parquet(path + "/data")
-    assigned.unpersist()
+    with released(stage(assigned)) as assigned:
+        n = assigned.count()
+        assigned.write.mode("append").partitionBy("cent_id").parquet(path + "/data")
     return n
 
 
@@ -782,24 +770,19 @@ def semantic_neardup_pairs(
 
     Output: (cent_id, id_a, id_b, cos_r) with cos rounded to 6.
 
-    Both corpus-sized intermediates are persisted with a count barrier
-    (released via the ``hold`` handle convention): the unit vectors are
-    referenced by every k-means iteration AND both sides of the pair
-    join, and the final assignment's lineage contains the whole Lloyd
-    chain — without the barriers the self-join re-runs k-means once
+    Both corpus-sized intermediates are staged (``caching.stage``): the
+    unit vectors are referenced by every k-means iteration AND both
+    sides of the pair join, and the final assignment's lineage contains
+    the whole Lloyd chain — uncached, the self-join re-runs k-means once
     per branch (measured 125 s → ~8 s at sf0.1). At 100 TB these are
     the SemDeDup working set (normalized corpus + assignment), the
     standard materialization of the paper's pipeline."""
-    from gov_ec_pipeline_etl_spark.caching import hold
-
     dim = vec_dim(emb, vec_col)
-    unit = unit_vectors(emb, id_col, vec_col).persist()
-    unit.count()
+    unit = stage(unit_vectors(emb, id_col, vec_col))
     assigned = kmeans_lloyd(
         unit, k=k, iters=iters, id_col="vec_id", vec_col="u"
     )
-    a = assigned.join(unit, "vec_id").persist()
-    a.count()
+    a = stage(assigned.join(unit, "vec_id"))
     # Flatten the unit vector to scalar columns BEFORE the pair join:
     # the per-pair dot then runs on flat doubles instead of 2*dim
     # GetArrayItem calls per candidate (bounds/null checks per element
@@ -820,14 +803,13 @@ def semantic_neardup_pairs(
         *[F.col("u")[i].alias(f"__ub{i}") for i in range(dim)],
     )
     dot_flat = " + ".join(f"__ua{i}*__ub{i}" for i in range(dim))
-    out = (
+    return (
         x.join(y, "cent_id")
         .where(F.col("id_a") < F.col("id_b"))
         .withColumn("cos", F.expr(dot_flat))
         .where(F.col("cos") >= threshold)
         .select("cent_id", "id_a", "id_b", F.round("cos", 6).alias("cos_r"))
     )
-    return hold(out, unit, a)
 
 
 def _pq_subs(col: str, d: int, m: int):
@@ -1042,19 +1024,15 @@ def build_ivfpq(
 def _write_ivfpq_codes(code_rows: DataFrame, path: str, mode: str) -> int:
     """Pack (vec_id, cent_id, sub, code) rows into one array row per
     vector and write partitioned by cent_id. Returns rows written."""
-    wide = (
-        code_rows.groupBy("vec_id", "cent_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("sub"), F.col("code")))),
-                lambda x: x.code.cast("int"),
-            ).alias("codes")
-        )
-        .persist()
+    wide = code_rows.groupBy("vec_id", "cent_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct(F.col("sub"), F.col("code")))),
+            lambda x: x.code.cast("int"),
+        ).alias("codes")
     )
-    n = wide.count()
-    wide.write.mode(mode).partitionBy("cent_id").parquet(path + "/data")
-    wide.unpersist()
+    with released(stage(wide)) as wide:
+        n = wide.count()
+        wide.write.mode(mode).partitionBy("cent_id").parquet(path + "/data")
     return n
 
 

@@ -395,9 +395,8 @@ def run_all(
                     out[name] = ("OK " if ok else "MISMATCH ") + msg
                 except Exception as e:  # noqa: BLE001
                     out[name] = f"ERROR {type(e).__name__}: {e}"
-            # hold()-attached handles are released above; clearing the
-            # cache between queries bounds what any internally-persisted
-            # intermediate can accumulate over a 150+-query gate run
+            # stages are released above; clearing the cache between
+            # queries also drops whatever a build that raised had staged
             # (queries never share caches — bench.py does the same).
             with _contextlib.suppress(Exception):
                 spark.catalog.clearCache()

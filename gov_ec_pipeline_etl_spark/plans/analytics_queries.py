@@ -307,7 +307,7 @@ def _pr_iter_sql(prev: str, out: str) -> str:
     tags=("graph", "iterative", "analytics"),
 )
 def x58_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gov_ec_pipeline_etl_spark.caching import hold
+    from gov_ec_pipeline_etl_spark.caching import stage
 
     o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -317,10 +317,10 @@ def x58_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # the edge table is referenced by every iteration (and deg by every
-    # damp step): without a barrier each branch of the unrolled lineage
-    # re-runs the orders ⋈ lineitem ⋈ DISTINCT derivation — measured
-    # ~7 recomputations at sf1. Materialize once (hold() convention).
-    e = (
+    # damp step): uncached, each branch of the unrolled lineage re-runs
+    # the orders ⋈ lineitem ⋈ DISTINCT derivation — measured ~7
+    # recomputations at sf1. Both are staged.
+    e = stage(
         pairs.select(
             (F.col("c") * 2).alias("src"), (F.col("s") * 2 + 1).alias("dst")
         )
@@ -329,16 +329,12 @@ def x58_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("s") * 2 + 1).alias("src"), (F.col("c") * 2).alias("dst")
             )
         )
-        .persist()
     )
-    e.count()
-    deg = (
+    deg = stage(
         e.groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
         .withColumnRenamed("src", "node")
-        .persist()
     )
-    deg.count()
     n_df = deg.agg(F.count(F.lit(1)).cast("double").alias("n"))
     r = deg.crossJoin(F.broadcast(n_df)).select(
         "node", "d", "n", (F.lit(1.0) / F.col("n")).alias("r")
@@ -375,12 +371,11 @@ def x58_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window then runs over just those 20 rows
     top = r.orderBy(F.col("r").desc(), "node").limit(20)
     w = Window.orderBy(F.col("r").desc(), "node")
-    out = top.select(
+    return top.select(
         "node",
         F.row_number().over(w).cast("bigint").alias("rnk"),
         F.round("r", 9).alias("pr_r"),
     )
-    return hold(out, e, deg)
 
 
 # (column, is_numeric) — the profile targets; timestamps and varchars

@@ -212,8 +212,6 @@ register_shared_fragment("minhash_pairs_cap64", _minhash_oracle(max_bucket=64))
     tags=("dedup", "minhash", "lsh", "llm-pipeline"),
 )
 def d02_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # returned as-is: any further wrapper (even a no-op rename) would
-    # strip the _persisted_inputs handles minhash_lsh_pairs attaches
     return minhash_lsh_pairs(
         _dirty_docs(spark, sf_dir), "doc_id", "text",
         k=3, num_hashes=12, bands=4, jaccard_threshold=0.5,
@@ -450,7 +448,7 @@ def _minhash_err_oracle(
     "estimated Jaccard (matching signature components / 12) next to the "
     "exact shingle Jaccard with the absolute error — the measured dial "
     "for choosing num_hashes/bands on a real corpus before a 100 TB "
-    "dedup run, computed in-engine from the SAME persisted sketch the "
+    "dedup run, computed in-engine from the SAME staged sketch the "
     "dedup path uses (one shingle scan feeds bands, verify, and "
     "signature). Oracle replays signature, estimate, and error in SQL.",
     tags=("dedup", "minhash", "quality", "llm-pipeline"),

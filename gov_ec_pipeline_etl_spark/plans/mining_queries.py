@@ -33,6 +33,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from gov_ec_pipeline_etl_spark.caching import stage
 from gov_ec_pipeline_etl_spark.plans.registry import register
 from gov_ec_pipeline_etl_spark.plans.util import T
 
@@ -383,14 +384,13 @@ def x59_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that single aggregate — no (orderkey, brand)-keyed distinct and
     # no orderkey self-join (pairs explode in-row from the set, fan-out
     # ≤ C(guard, 2) per basket by construction)
-    sets = (
+    # staged: 4 consumers, 1 computation
+    sets = stage(
         li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_orderkey")
         .agg(F.collect_set("p_brand").alias("brands"))
         .where(F.size("brands") <= _MAX_BASKET)
-        .persist()  # count barrier: 4 consumers, 1 computation
     )
-    sets.count()
     n_orders = sets.agg(F.count(F.lit(1)).alias("n_orders"))
     items = sets.select(F.explode("brands").alias("p_brand"))
     brand_n = items.groupBy("p_brand").agg(F.count(F.lit(1)).alias("cnt"))
@@ -402,9 +402,7 @@ def x59_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("support"))
         .where(F.col("support") >= 3)
     )
-    from gov_ec_pipeline_etl_spark.caching import hold
-
-    return hold(
+    return (
         pairs.join(
             F.broadcast(brand_n).withColumnsRenamed(
                 {"p_brand": "brand_a", "cnt": "cnt_a"}
@@ -437,8 +435,7 @@ def x59_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 / 1000000
             ).alias("lift"),
-        ),
-        sets,
+        )
     )
 
 

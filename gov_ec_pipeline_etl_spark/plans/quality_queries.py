@@ -575,12 +575,11 @@ def u43_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = T(spark, sf_dir, "documents")
     seg = bpe_segmented_vocab(docs, steps=4)
-    held = getattr(seg, "_persisted_inputs", [])
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     stream = docs.select(
         "source", F.explode(F.split(norm, " ")).alias("w")
     )
-    out = (
+    return (
         stream.join(seg, "w")
         .groupBy("source")
         .agg(
@@ -588,9 +587,6 @@ def u43_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_toks"),
         )
     )
-    from gov_ec_pipeline_etl_spark.caching import hold
-
-    return hold(out, *held)
 
 
 from gov_ec_pipeline_etl_spark.plans.text_queries import QUALITY_SQL as _Q_SQL

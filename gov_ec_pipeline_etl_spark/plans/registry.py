@@ -5,9 +5,9 @@ alphabetically, so keys are tiered to put one of everything inside that
 window — d* dedup, m* multimodal, q* flagship relational, r* reference
 contract semantics, s* similarity, st* streaming, t* text — exactly 50.
 The x* tier ("extended relational", x07–x38) is the rest of the
-relational surface; those keys were recorded green under their original
-qNN names in round 1 (CORRECTNESS_r01.json) and stay in the local oracle
-gate (``python -m gov_ec_pipeline_etl_spark.oracle``) every round.
+relational surface; those keys were first recorded green under qNN names
+and stay in the local oracle gate
+(``python -m gov_ec_pipeline_etl_spark.oracle``).
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 _REGISTRY: dict[str, "Query"] = {}
 
 # The 50 names the external driver records (first 50 alphabetically,
-# frozen as of CORRECTNESS_r03.json — all hash-green). Any NEW query
+# frozen once all were hash-green). Any NEW query
 # must sort after the window's last name so it cannot evict a recorded
 # row; register() enforces this so the discipline can't regress.
 DRIVER_WINDOW: frozenset[str] = frozenset(

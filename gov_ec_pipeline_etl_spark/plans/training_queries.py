@@ -14,6 +14,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from gov_ec_pipeline_etl_spark.caching import stage
 from gov_ec_pipeline_etl_spark.functions.hashing import portable_hash64_sql
 from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import shingle_rows
 from gov_ec_pipeline_etl_spark.plans.dedup_queries import (
@@ -1063,8 +1064,8 @@ def u12_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat("text", F.lit(" zz0 zz1 zz2")).alias("text"),
     )
     # One shingle+sketch pass over corpus∪arrivals (ids are disjoint by
-    # construction), split by id range afterwards: halves the sketch
-    # barriers and scans vs sketching each side separately. In the
+    # construction), split by id range afterwards: halves the sketches
+    # and scans vs sketching each side separately. In the
     # stored-sketch deployment shape the corpus side is instead read
     # back from disk — see operators.dedup_fuzzy.incremental_neardup_
     # against, which this query's band join mirrors asymmetrically.
@@ -1074,14 +1075,13 @@ def u12_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle twice (each side's groupBy re-scanned the full cached
     # sketch through its filter). A doc's signature is independent of
     # which side it is computed in, so the split-after form is
-    # row-identical; persisted because both join sides derive from it.
+    # row-identical; staged because both join sides derive from it.
     from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
         band_keys_from_signature,
         minhash_signature,
     )
 
-    sig_all = minhash_signature(sh_all).persist()
-    sig_all.count()
+    sig_all = stage(minhash_signature(sh_all))
     bands_all = band_keys_from_signature(sig_all)
     bands_new = bands_all.where(F.col("id") >= MUT_OFFSET)
     bands_corpus = bands_all.where(F.col("id") < MUT_OFFSET)
@@ -1095,17 +1095,11 @@ def u12_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    from gov_ec_pipeline_etl_spark.caching import hold
-
-    out = jaccard_verify(cand, sh_all, 0.5, on="h60").select(
+    return jaccard_verify(cand, sh_all, 0.5, on="h60").select(
         F.col("id_a").alias("new_id"),
         F.col("id_b").alias("corpus_id"),
         "jaccard",
     )
-    # register the persisted frames so runners can unpersist via the
-    # _persisted_inputs convention (ADVICE r10: sig_all leaked until
-    # clearCache) — minhash_sketch's own persist rides along in sh_all.
-    return hold(out, sig_all, sh_all)
 
 
 @register(
@@ -1205,13 +1199,12 @@ def u13_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fp = F.md5(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "))
     w_fp = Window.partitionBy(fp)
-    exact_kept = (
+    # staged: feeds clustering and two aggregates
+    exact_kept = stage(
         corpus.withColumn("keep_id", F.min("doc_id").over(w_fp))
         .where(F.col("doc_id") == F.col("keep_id"))
         .select("doc_id", "text", "n_tokens")
-        .persist()
     )
-    exact_kept.count()  # cache barrier: feeds clustering + two aggregates
 
     rows = shingle_rows(exact_kept, "doc_id", "text", 5)
     mh = rows.groupBy("id").agg(F.min(F.md5("s")).alias("min_sh"))
@@ -1243,7 +1236,7 @@ def u13_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_tokens")
     )
 
-    def stage(df: DataFrame, name: str) -> DataFrame:
+    def survivors(df: DataFrame, name: str) -> DataFrame:
         return df.agg(
             F.lit(name).alias("stage"),
             F.count(F.lit(1)).alias("n_docs"),
@@ -1251,9 +1244,9 @@ def u13_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return (
-        stage(corpus, "raw")
-        .unionByName(stage(exact_kept, "after_exact"))
-        .unionByName(stage(near_kept, "after_near"))
+        survivors(corpus, "raw")
+        .unionByName(survivors(exact_kept, "after_exact"))
+        .unionByName(survivors(near_kept, "after_near"))
     )
 
 
@@ -1689,7 +1682,6 @@ def _dhash_oracle(max_hamming: int = 10) -> str:
           "llm-pipeline"),
 )
 def u69_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gov_ec_pipeline_etl_spark.caching import hold
     from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
         fingerprint_group_pairs,
     )
@@ -1706,12 +1698,10 @@ def u69_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads = ppm_fixture_payloads(
         ids.unionByName(mut), mut_offset=MUT_OFFSET
     )
-    # fingerprints persist+materialize once; the group collapse and both
-    # chunk-join sides read the cache (the simhash_pairs discipline —
-    # decode+hash is the hot stage)
-    fp = dhash_images(payloads).persist()
-    fp.count()
-    return hold(fingerprint_group_pairs(fp, max_hamming=10), fp)
+    # fingerprints are staged; the group collapse and both chunk-join
+    # sides read the cache (the simhash_pairs discipline — decode+hash
+    # is the hot stage)
+    return fingerprint_group_pairs(stage(dhash_images(payloads)), max_hamming=10)
 
 
 def _audio_fp_oracle(max_hamming: int = 2) -> str:
@@ -1816,7 +1806,6 @@ def _audio_fp_oracle(max_hamming: int = 2) -> str:
           "llm-pipeline"),
 )
 def u70_audio_fp_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gov_ec_pipeline_etl_spark.caching import hold
     from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
         fingerprint_group_pairs,
     )
@@ -1833,11 +1822,9 @@ def u70_audio_fp_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads = wav_fixture_payloads(
         ids.unionByName(mut), mut_offset=MUT_OFFSET
     )
-    # fingerprints persist+materialize once; the group collapse and both
-    # chunk-join sides read the cache (decode+hash is the hot stage)
-    fp = audio_envelope_fp(payloads).persist()
-    fp.count()
-    return hold(fingerprint_group_pairs(fp, max_hamming=2), fp)
+    # fingerprints are staged; the group collapse and both chunk-join
+    # sides read the cache (decode+hash is the hot stage)
+    return fingerprint_group_pairs(stage(audio_envelope_fp(payloads)), max_hamming=2)
 
 
 def _video_fp_oracle(max_hamming: int = 6) -> str:
@@ -1961,7 +1948,6 @@ def _video_fp_oracle(max_hamming: int = 6) -> str:
           "llm-pipeline"),
 )
 def u72_video_fp_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gov_ec_pipeline_etl_spark.caching import hold
     from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
         fingerprint_group_pairs,
     )
@@ -1978,11 +1964,9 @@ def u72_video_fp_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads = video_fixture_payloads(
         ids.unionByName(mut), mut_offset=MUT_OFFSET
     )
-    # fingerprints persist+materialize once; the group collapse and both
-    # chunk-join sides read the cache (parse+hash is the hot stage)
-    fp = video_dhash_fp(payloads).persist()
-    fp.count()
-    return hold(fingerprint_group_pairs(fp, max_hamming=6), fp)
+    # fingerprints are staged; the group collapse and both chunk-join
+    # sides read the cache (parse+hash is the hot stage)
+    return fingerprint_group_pairs(stage(video_dhash_fp(payloads)), max_hamming=6)
 
 
 @register(
@@ -2187,15 +2171,12 @@ def _split_leakage(
     sb = splits.select(
         F.col("id").alias("id_b"), F.col("split").alias("split_b")
     )
-    from gov_ec_pipeline_etl_spark.caching import hold
-
-    out = (
+    return (
         pairs.join(sa, "id_a")
         .join(sb, "id_b")
         .where(F.col("split_a") != F.col("split_b"))
         .select("id_a", "id_b", "split_a", "split_b", "jaccard")
     )
-    return hold(out, *getattr(pairs, "_persisted_inputs", []))
 
 
 @register(
@@ -2543,7 +2524,6 @@ def _curation_funnel(
 ) -> DataFrame:
     from pyspark.sql import Window
 
-    from gov_ec_pipeline_etl_spark.caching import hold
     from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
         minhash_lsh_pairs,
         positional_shingle_rows,
@@ -2622,24 +2602,19 @@ def _curation_funnel(
     # final disposition join). Unpersisted, Spark executes the whole
     # upstream funnel — LSH pair generation AND the contamination
     # shingle join — once per reference (measured r10: 14.0 -> 10.4 s
-    # at sf0.1 from this barrier alone; guide §5 persist-when-reused).
+    # at sf0.1 from this cache alone; guide §5 persist-when-reused).
     # The frame is corpus-sized but 3 narrow columns (id, source,
     # disposition tag), the standard funnel-ledger materialization.
-    pre = pre.persist()
-    pre.count()
+    pre = stage(pre)
     survivors = pre.where(F.col("disp").isNull()).select("doc_id", "source")
     splits = stratified_split(survivors, "doc_id", "source").select(
         F.col("id").alias("doc_id"), F.col("split")
     )
-    out = (
-        pre.join(splits, "doc_id", "left")
-        .select(
-            F.col("doc_id").alias("id"),
-            "source",
-            F.coalesce("disp", "split").alias("disposition"),
-        )
+    return pre.join(splits, "doc_id", "left").select(
+        F.col("doc_id").alias("id"),
+        "source",
+        F.coalesce("disp", "split").alias("disposition"),
     )
-    return hold(out, pre, *getattr(pairs, "_persisted_inputs", []))
 
 
 # Candidate budget for the guarded funnel: C(64,2) ≈ 2k pairs per LSH
@@ -2796,8 +2771,6 @@ def u44_xent_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def u51_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gov_ec_pipeline_etl_spark.functions.hashing import portable_hash64
 
-    from gov_ec_pipeline_etl_spark.caching import hold
-
     toks = T(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("token")
     )
@@ -2806,15 +2779,11 @@ def u51_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = (h * (F.col("s") + 1) % 1024).alias("bucket")
     # the tokenize + 4-seed explode + md5-hash pass is the expensive
     # leaf and FIVE consumers need it (two half grids, the full grid,
-    # the exact counts, the probes) — materialize it once (count
-    # barrier per the hold() convention) instead of re-hashing the
-    # corpus per consumer
-    seeded = (
-        toks.select("doc_id", "token", seeds)
-        .select("doc_id", "token", "s", bucket)
-        .persist()
+    # the exact counts, the probes) — stage it instead of re-hashing
+    # the corpus per consumer
+    seeded = stage(
+        toks.select("doc_id", "token", seeds).select("doc_id", "token", "s", bucket)
     )
-    seeded.count()
 
     def grid(side: DataFrame) -> DataFrame:
         return side.groupBy("s", "bucket").agg(F.count(F.lit(1)).alias("n"))
@@ -2839,7 +2808,7 @@ def u51_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = top20.select("token", "exact_n", seeds).select(
         "token", "exact_n", "s", bucket
     )
-    out = (
+    return (
         probes.join(F.broadcast(merged), ["s", "bucket"])
         .join(
             F.broadcast(cm_full.withColumnRenamed("n", "n_full")),
@@ -2851,7 +2820,6 @@ def u51_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.min("n") == F.min("n_full")).alias("merge_exact"),
         )
     )
-    return hold(out, seeded)
 
 
 @register(

@@ -53,7 +53,7 @@ def run_streaming_neardup_ingest(
     stored = read_sketch_index(spark, idx)
     # one file per micro-batch: the check runs as BATCHES separate
     # foreachBatch invocations, not one big batch; the loop releases the
-    # per-batch arrival sketch the operator persists — an unbounded ingest
+    # per-batch arrival sketch the operator stages — an unbounded ingest
     # would otherwise pin one per trigger
     stream, staged = stage(arrivals, "neardup_ingest", BATCHES)
     return drain(

@@ -137,12 +137,13 @@ def drain(
     Each micro-batch, or ``each(batch)`` when given, is written into that
     directory: appended in append and update mode (update mode keeps
     every emission of a key, one per batch), replacing it in complete
-    mode. Whatever ``each`` persisted is released after the write. The
-    checkpoint, under the staging root too, and those ``inputs`` that lie
-    under it are deleted once the run has ended, succeeded or not; a
-    table streamed in place is never touched. ``confs`` are set on the
-    caller's session only for the length of ``start()`` (see
-    :func:`replay`).
+    mode. Whatever ``each`` staged (``caching.stage``) is released after
+    the write: the batch runs on the stream's own session, so that frees
+    the batch's stages only. The checkpoint, under the staging root too,
+    and those ``inputs`` that lie under it are deleted once the run has
+    ended, succeeded or not; a table streamed in place is never touched.
+    ``confs`` are set on the caller's session only for the length of
+    ``start()`` (see :func:`replay`).
 
     An empty input staged by :func:`stage` is still one file, so it runs
     one empty micro-batch, whose write leaves a file with the result's

@@ -196,21 +196,3 @@ def test_line_segments_match_split_slice_reference(spark):
     assert by_text["\tlead tab"] == [" lead tab"]
     assert by_text["\tboth ends a b c d e f\n"] == [" both ends a b c d e", "f "]
     assert by_text[None] is None and by_text[""] == [""]
-
-
-def test_u46_build_and_explain_start_no_job(spark):
-    """Building u46's plan and explaining it run no Spark job."""
-    from gov_ec_pipeline_etl_spark.plans import all_queries
-    from gov_ec_pipeline_etl_spark.plans.util import T
-    from tests.conftest import SF_SMOKE
-
-    T(spark, SF_SMOKE, "documents")  # the schema read may start a job once
-    sc = spark.sparkContext
-    sc.setJobGroup("u46-build", "u46 plan construction")
-    try:
-        all_queries()["u46_line_dedup"].spark(spark, SF_SMOKE).explain()
-        jobs = sc.statusTracker().getJobIdsForGroup("u46-build")
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
-    assert jobs == []

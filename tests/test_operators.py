@@ -53,6 +53,25 @@ def test_replace_na_tokens_and_drop_rows(spark):
     assert drop_all_null_rows(cleaned).count() == 2
 
 
+def test_drop_all_null_rows_keeps_na_drop_semantics(spark):
+    """An all-null row goes; a row whose one value sits in a non-string
+    column stays; a row whose one value is a NaN double goes (NaN counts
+    as null, as in ``na.drop``)."""
+    df = spark.createDataFrame(
+        [
+            (None, None, None),
+            (None, 7, None),
+            (None, None, float("nan")),
+            (None, None, 1.5),
+            ("x", None, None),
+        ],
+        "s: string, n: int, d: double",
+    )
+    rows = {(r.s, r.n, r.d) for r in drop_all_null_rows(df).collect()}
+    assert rows == {(None, 7, None), (None, None, 1.5), ("x", None, None)}
+    assert rows == {(r.s, r.n, r.d) for r in df.na.drop(how="all").collect()}
+
+
 def test_drop_all_null_columns(spark):
     df = spark.createDataFrame([(1, None), (2, None)], "a: bigint, b: string")
     assert drop_all_null_columns(df).columns == ["a"]

@@ -106,6 +106,61 @@ def test_artifact_oversize_policy(tmp_path):
         upload_tree(str(src), str(dest), max_mb=0.001, mode="strict")
 
 
+_ETL_CHILD = """
+import json, sys
+from gov_ec_pipeline_etl_spark.etl_pipeline import run_etl
+from gov_ec_pipeline_etl_spark.session import get_spark
+cfg, res, work = sys.argv[1], json.loads(sys.argv[2]), sys.argv[3]
+r = run_etl(get_spark("etl-width"), cfg, res, work)
+print(json.dumps({"status": r.status, "rows_out": r.reports["r"]["rows_out"]}))
+"""
+
+
+def test_reference_width_load_finishes(tmp_path):
+    """A two-row resource carrying all 36 raw contract columns of the
+    reference (every declared column but the derived ``ano``) loads
+    through ``run_etl`` within the wall bound. The load runs in its own
+    process, so a plan that never finishes fails the test, rather than
+    hanging the suite: with ``na.drop(how="all")`` planning grew without
+    bound from about 20 columns on."""
+    import subprocess
+    import sys
+
+    import pandas as pd
+
+    from gov_ec_pipeline_etl_spark.contract.loader import load_config
+
+    root = os.path.join(os.path.dirname(__file__), "..")
+    cfg = os.path.join(root, "configs", "detenidos.yaml")
+    kinds = load_config(cfg)["schema"]["columns"]
+    sample = {
+        "datetime": ["2024-01-01", "2024-01-02"],
+        "numeric": ["30", "41"],
+        "string_codes": ["0101", "0901"],
+        "category": ["Detenido", "Aprehendido"],
+    }
+    cols = {c: sample[k] for c, k in kinds.items() if c != "ano"}
+    cols["latitud"], cols["longitud"] = ["-2.9", "-2.2"], ["-79.0", "-79.9"]
+    assert len(cols) == 36
+    csv = tmp_path / "wide.csv"
+    pd.DataFrame(cols).to_csv(csv, index=False)
+    res = [{"id": "r", "path": str(csv), "last_modified": "x",
+            "size": os.path.getsize(csv), "url": "file://r", "format": "CSV"}]
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", PYTHONPATH=os.path.abspath(root))
+    try:
+        out = subprocess.run(
+            [sys.executable, "-c", _ETL_CHILD, cfg, json.dumps(res),
+             str(tmp_path / "work")],
+            capture_output=True, text=True, env=env, timeout=150,
+        )
+    except subprocess.TimeoutExpired:
+        pytest.fail("the 36-column load gave no result within 150 s")
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == {
+        "status": "ok", "rows_out": 2,
+    }
+
+
 def test_full_pipeline_incremental(spark, tmp_path):
     """Two runs: second run skips unchanged resources; failed transform
     does not promote state."""
