@@ -37,6 +37,7 @@ def _index_cmd(args) -> int:
     from gov_ec_pipeline_etl_spark.operators import dedup_fuzzy as dd
     from gov_ec_pipeline_etl_spark.operators import similarity as sim
     from gov_ec_pipeline_etl_spark.session import get_spark
+    from gov_ec_pipeline_etl_spark.sinks import snapshot
 
     spark = get_spark("gov-ec-pipeline-etl-index")
     if args.action == "build":
@@ -81,8 +82,7 @@ def _index_cmd(args) -> int:
             idx = dd.read_sketch_index(spark, args.index_path)
             ids = "id"
         else:  # ivf / ivfpq share the centroid-partitioned layout
-            dd.require_index_dir(args.index_path + "/data")
-            idx = spark.read.parquet(args.index_path + "/data")
+            idx = snapshot.read(spark, args.index_path + "/data")
             ids = "vec_id"
         print(json.dumps({
             **meta,
@@ -93,13 +93,9 @@ def _index_cmd(args) -> int:
         return 0
 
     if args.action == "compact":
-        fn = {
-            "ngram": dd.compact_ngram_index,
-            "minhash": dd.compact_sketch_index,
-            "ivf": sim.compact_ivf,
-            "ivfpq": sim.compact_ivf,  # same centroid-partitioned layout
-        }[kind]
-        print(json.dumps(fn(spark, args.index_path, args.files_per_partition)))
+        print(json.dumps(
+            dd.compact_index(spark, args.index_path, args.files_per_partition)
+        ))
         return 0
 
     if args.action == "ingest":
@@ -482,20 +478,13 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "pull":
-        import os
-
+        from gov_ec_pipeline_etl_spark.sinks.snapshot import replacing
         from gov_ec_pipeline_etl_spark.sources.catalog import download_resource
 
-        tmp = args.dest + ".tmp"
-        try:
+        # atomic promote, never a torn file; a failed pull leaves no
+        # partial beside the destination
+        with replacing(args.dest) as tmp:
             n = download_resource(args.url, tmp)
-        except BaseException:
-            # the atomic-promote contract covers success only; a failed
-            # pull must not litter the destination with .tmp partials
-            if os.path.exists(tmp):
-                os.remove(tmp)
-            raise
-        os.replace(tmp, args.dest)  # atomic promote, never a torn file
         print(json.dumps({"dest": args.dest, "bytes": n}))
         return 0
 

@@ -14,11 +14,15 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import json
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from gov_ec_pipeline_etl_spark.caching import released, stage
 from gov_ec_pipeline_etl_spark.functions.hashing import hash64
+from gov_ec_pipeline_etl_spark.sinks import snapshot
 
 
 def _anchor_rows(
@@ -444,8 +448,8 @@ def minhash_sketch(
     Each distinct shingle is hashed ONCE to its 60-bit identity and the
     strings are dropped: the cached sketch is smaller and joins on
     bigints. Every consumer (signature, bands, verification sets) reads
-    the one cached copy; the cluster-scale form writes the sketch table
-    out once (``write_sketch_table``)."""
+    the one cached copy; the cluster-scale form stores the sketch once
+    (``build_sketch_index``)."""
     return stage(shingle_hashes(df, id_col, text_col, k, portable))
 
 
@@ -1084,22 +1088,6 @@ def _jaccard_from_kept(kept: DataFrame, jaccard_threshold: float) -> DataFrame:
     )
 
 
-def write_sketch_table(sh: DataFrame, path: str) -> None:
-    """Materialize a (id, h60) shingle sketch as a stored parquet table.
-
-    This is the cluster-scale form of minhash_sketch's staged sketch:
-    the corpus sketch is computed ONCE when a corpus snapshot is built
-    and every later ingest batch reads it back — no per-batch
-    corpus re-shingling, no corpus self-join. Repartitioned on id so an
-    incremental band join shuffles only the (small) arrival side when
-    the table is read back co-partitioned."""
-    sh.repartition("id").write.mode("overwrite").parquet(path)
-
-
-def read_sketch_table(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def build_sketch_index(
     df: DataFrame,
     id_col: str,
@@ -1108,23 +1096,25 @@ def build_sketch_index(
     k: int = 3,
     portable: bool = True,
 ) -> None:
-    """MinHash-sketch index lifecycle root: sketch the corpus once and
-    store it under ``path/sketch`` with self-describing ``_meta.json``
-    (same lifecycle contract as the n-gram index: build →
-    probe/ingest → compact, all CLI-operable)."""
+    """MinHash-sketch index lifecycle root: sketch the corpus ONCE and
+    publish the (id, h60) rows as the stored table ``path/sketch``, with
+    self-describing ``_meta.json`` (same lifecycle contract as the
+    n-gram index: build → probe/ingest → compact, all CLI-operable).
+    Every later ingest batch reads the sketch back — no per-batch corpus
+    re-shingling, no corpus self-join. Repartitioned on id so an
+    incremental band join shuffles only the (small) arrival side."""
     # ids stored as bigint so the pinned read schema holds across builds
-    write_sketch_table(
-        shingle_hashes(df, id_col, text_col, k, portable).select(
-            F.col("id").cast("long").alias("id"), "h60"
-        ),
+    snapshot.write(
+        shingle_hashes(df, id_col, text_col, k, portable)
+        .select(F.col("id").cast("long").alias("id"), "h60")
+        .repartition("id"),
         path + "/sketch",
     )
     _write_index_meta(path, {"kind": "minhash", "k": k, "portable": portable})
 
 
 def read_sketch_index(spark: SparkSession, path: str) -> DataFrame:
-    require_index_dir(path + "/sketch")
-    return spark.read.schema("id bigint, h60 bigint").parquet(path + "/sketch")
+    return snapshot.read(spark, path + "/sketch", "id bigint, h60 bigint")
 
 
 def append_to_sketch_index(
@@ -1135,29 +1125,22 @@ def append_to_sketch_index(
     text_col: str = "text",
 ) -> int:
     """Ingest an arrival batch into a stored MinHash sketch: sketch the
-    batch with the index's own build parameters and append — linear in
-    the batch, the corpus sketch is never rewritten. (Unlike the n-gram
-    index there is no frozen statistic here: the sketch is exact per
-    document, so append drift cannot occur.)"""
-    recover_index_dir(path + "/sketch")  # append into a fresh dir would
-    # otherwise bury a crash-stranded corpus under a batch-only index
+    batch with the index's own build parameters and publish the current
+    snapshot plus the batch's files — linear in the batch, the corpus
+    sketch is never rewritten. (Unlike the n-gram index there is no
+    frozen statistic here: the sketch is exact per document, so append
+    drift cannot occur.)"""
     meta = read_index_meta(path)
     with released(
         minhash_sketch(arrivals, id_col, text_col, meta["k"], meta["portable"])
     ) as sh:
         n = sh.count()
-        sh.select(F.col("id").cast("long").alias("id"), "h60").repartition(
-            "id"
-        ).write.mode("append").parquet(path + "/sketch")
+        snapshot.write(
+            sh.select(F.col("id").cast("long").alias("id"), "h60").repartition("id"),
+            path + "/sketch",
+            append=True,
+        )
     return n
-
-
-def compact_sketch_index(
-    spark: SparkSession, path: str, files_per_partition: int = 1
-) -> dict[str, int]:
-    return compact_index_dir(
-        spark, path + "/sketch", None, files_per_partition, "id bigint, h60 bigint"
-    )
 
 
 def incremental_neardup_against(
@@ -1234,7 +1217,7 @@ def write_ngram_index(
     hash_dirs: int = 16,
 ) -> None:
     """Materialize the DF-cut (id, h60) inverted index as a stored
-    parquet table — the n-gram analogue of ``write_sketch_table``
+    parquet table — the n-gram analogue of ``build_sketch_index``
     (VERDICT r3 #3): the corpus is shingled, hashed, and head-cut ONCE
     when a snapshot is built; every later Jaccard query (full-corpus
     pairs or an arrival batch probe) reads the index back instead of
@@ -1254,14 +1237,13 @@ def write_ngram_index(
     with released(minhash_sketch(df, id_col, text_col, k, portable)) as sh:
         head = head_shingles(sh, max_df)
         head.write.mode("overwrite").parquet(path + "/head")
-        (
+        snapshot.write(
             sh.join(F.broadcast(head), "h60", "left_anti")
             .select(F.col("id").cast("long").alias("id"), "h60")
             .withColumn("hb", F.pmod("h60", F.lit(hash_dirs)))
-            .repartition("hb")
-            .write.mode("overwrite")
-            .partitionBy("hb")
-            .parquet(path + "/kept")
+            .repartition("hb"),
+            path + "/kept",
+            partition_by=["hb"],
         )
     _write_index_meta(
         path,
@@ -1279,21 +1261,43 @@ def _write_index_meta(path: str, meta: dict) -> None:
     """Persist the index's build parameters next to its data so lifecycle
     operations (ingest/probe/compact, the CLI) are self-describing — a
     probe with a different k or hash would silently return garbage."""
-    import json as _json
-    import os as _os
-
-    tmp = _os.path.join(path, "_meta.json.tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        _json.dump(meta, f, sort_keys=True)
-    _os.replace(tmp, _os.path.join(path, "_meta.json"))
+    snapshot.write_json(os.path.join(path, "_meta.json"), meta)
 
 
 def read_index_meta(path: str) -> dict:
-    import json as _json
-    import os as _os
+    with open(os.path.join(path, "_meta.json"), encoding="utf-8") as f:
+        return json.load(f)
 
-    with open(_os.path.join(path, "_meta.json"), encoding="utf-8") as f:
-        return _json.load(f)
+
+# each index kind's data table under the index root, and its partition column
+_DATA_TABLES = {
+    "minhash": ("sketch", None),
+    "ngram": ("kept", "hb"),
+    "ivf": ("data", "cent_id"),
+    "ivfpq": ("data", "cent_id"),
+}
+
+
+def compact_index(
+    spark: SparkSession, path: str, files_per_partition: int = 1
+) -> dict[str, int]:
+    """Rewrite a stored index's data table with ``files_per_partition``
+    files per partition directory (or per table when unpartitioned) —
+    the maintenance job for append-heavy indexes, where each ingest
+    batch adds one small file set per touched partition and the FILE
+    COUNT (not bytes) becomes the probe bottleneck. This is the keyed
+    sink's own ``compact_partitions``, published the same way: a probe
+    that resolved the previous snapshot still finds its files. Rows move
+    between files, never change, so results are bit-identical across a
+    compaction — lifecycle-tested for every stored index kind."""
+    from gov_ec_pipeline_etl_spark.sinks.upsert import compact_partitions
+
+    name, part = _DATA_TABLES[read_index_meta(path)["kind"]]
+    table = os.path.join(path, name)
+    snapshot.require(table)
+    return compact_partitions(
+        spark, table, [part] if part else None, files_per_partition
+    )
 
 
 def append_to_ngram_index(
@@ -1314,7 +1318,6 @@ def append_to_ngram_index(
     deployed inverted index makes): shingles that become heavy only
     through arrivals keep indexing until a rebuild recomputes the cut.
     Returns the number of appended (id, h60) rows."""
-    recover_index_dir(path + "/kept")  # see append_to_sketch_index
     meta = read_index_meta(path)
     head = read_ngram_head(spark, path)
     with released(
@@ -1326,124 +1329,10 @@ def append_to_ngram_index(
         )
     ) as sh_new:
         n = sh_new.count()
-        sh_new.repartition("hb").write.mode("append").partitionBy("hb").parquet(
-            path + "/kept"
+        snapshot.write(
+            sh_new.repartition("hb"), path + "/kept", partition_by=["hb"], append=True
         )
     return n
-
-
-def compact_index_dir(
-    spark: SparkSession,
-    data_dir: str,
-    part_col: str | None,
-    files_per_partition: int = 1,
-    schema: str | None = None,
-) -> dict[str, int]:
-    """Rewrite a stored index's data directory with
-    ``files_per_partition`` files per partition dir (or per table when
-    unpartitioned) — the maintenance job for append-heavy indexes,
-    where each ingest batch adds one small file set per touched
-    partition and the FILE COUNT (not bytes) becomes the probe
-    bottleneck. The rewrite lands in a sibling directory and is
-    promoted with two atomic renames through a DETERMINISTIC
-    ``<data_dir>.old`` name; a crash between the renames leaves only
-    ``.old``, which ``recover_index_dir`` (called here and by every
-    APPENDER — maintenance ops, serialized by assumption) restores with
-    one rename, while pure readers fail loudly via
-    ``require_index_dir`` (a reader must not rename directories under
-    an in-flight promote). The index is always recoverable to the old
-    or the new layout, never stranded half-written. Query results are
-    bit-identical across the compaction (rows are moved, never
-    changed) — lifecycle-tested for all three stored index kinds."""
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
-    recover_index_dir(data_dir)
-    old_dir = data_dir + ".old"
-    if _os.path.exists(old_dir):
-        # leftover from a crash AFTER promote but before cleanup —
-        # data_dir is the new layout; the .old copy is garbage
-        _shutil.rmtree(old_dir, ignore_errors=True)
-    reader = spark.read.schema(schema) if schema else spark.read
-    current = reader.parquet(data_dir)
-    files_before = len(current.inputFiles())
-    new_dir = f"{data_dir}.compact-{_uuid.uuid4().hex[:12]}"
-    if part_col:
-        # largest partition's row count is parquet-footer-cheap (count
-        # aggregates never read data columns)
-        biggest = int(
-            current.groupBy(part_col).count().agg(F.max("count")).first()[0] or 1
-        )
-        (
-            current.repartition(part_col)
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", max(1, -(-biggest // files_per_partition)))
-            .partitionBy(part_col)
-            .parquet(new_dir)
-        )
-    else:
-        current.coalesce(files_per_partition).write.mode("overwrite").parquet(new_dir)
-    _os.rename(data_dir, old_dir)
-    _os.rename(new_dir, data_dir)
-    _shutil.rmtree(old_dir, ignore_errors=True)
-    reader = spark.read.schema(schema) if schema else spark.read
-    files_after = len(reader.parquet(data_dir).inputFiles())
-    return {"files_before": files_before, "files_after": files_after}
-
-
-def recover_index_dir(data_dir: str) -> bool:
-    """Restore an index data directory stranded by a compaction crash.
-
-    ``compact_index_dir`` promotes with ``rename(data, data.old)`` then
-    ``rename(new, data)``; a crash between the two leaves only
-    ``data.old``. MAINTENANCE entry points (appenders, the next
-    compaction) call this first: if ``data_dir`` is missing and the
-    deterministic ``.old`` sibling exists, one rename restores the
-    pre-compaction layout (rows are identical either side of a
-    compaction, so recovery loses nothing). Appenders MUST recover
-    before an ``append``-mode write — Spark would otherwise silently
-    CREATE a fresh batch-only directory, and the next compaction's
-    leftover-``.old`` cleanup would then delete the stranded corpus.
-
-    Pure READERS deliberately do not call this: a reader renaming
-    directories races an in-flight compaction's promote window (its
-    second rename would land on a recreated dir and fail). Readers use
-    :func:`require_index_dir`, which raises with the remedy instead.
-    Returns True when a recovery was performed."""
-    import os as _os
-
-    old = data_dir + ".old"
-    if not _os.path.exists(data_dir) and _os.path.exists(old):
-        _os.rename(old, data_dir)
-        return True
-    return False
-
-
-def require_index_dir(data_dir: str) -> None:
-    """Read-side guard: fail LOUDLY (with the remedy) when the index
-    data directory is missing but its ``.old`` crash artifact exists —
-    never silently scan nothing, and never mutate on a read path (a
-    reader's rename would race an in-flight compaction's promote)."""
-    import os as _os
-
-    if not _os.path.exists(data_dir) and _os.path.exists(data_dir + ".old"):
-        raise FileNotFoundError(
-            f"{data_dir} is missing but {data_dir + '.old'} exists — a "
-            "compaction crashed mid-promote; run any maintenance op "
-            "(ingest/compact, or recover_index_dir()) to restore it"
-        )
-
-
-_NGRAM_KEPT_SCHEMA = "id bigint, h60 bigint, hb int"
-
-
-def compact_ngram_index(
-    spark: SparkSession, path: str, files_per_partition: int = 1
-) -> dict[str, int]:
-    return compact_index_dir(
-        spark, path + "/kept", "hb", files_per_partition, _NGRAM_KEPT_SCHEMA
-    )
 
 
 def read_ngram_index(spark: SparkSession, path: str) -> DataFrame:
@@ -1454,12 +1343,9 @@ def read_ngram_index(spark: SparkSession, path: str) -> DataFrame:
     max_df — e.g. a uniform closed vocabulary at scale — has no
     discriminative shingles, the cut keeps nothing, and Spark's
     partitioned writer emits no files to infer a schema from."""
-    require_index_dir(path + "/kept")
-    return (
-        spark.read.schema("id bigint, h60 bigint, hb int")
-        .parquet(path + "/kept")
-        .select("id", "h60")
-    )
+    return snapshot.read(
+        spark, path + "/kept", "id bigint, h60 bigint, hb int"
+    ).select("id", "h60")
 
 
 def read_ngram_head(spark: SparkSession, path: str) -> DataFrame:

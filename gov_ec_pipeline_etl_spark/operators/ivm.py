@@ -10,21 +10,30 @@ a user can run it" contract as the stored dedup/ANN indexes):
     apply_delta(spark, delta_df, store, batch_id="2026-08-15")
     verify_store(spark, full_df, store)          # == recompute?
 
-Layout — versioned snapshots with an atomically-swapped pointer (the
-upsert sink's promote discipline, simplified: one writer assumed):
+Layout — the stored-table snapshot protocol every writer here shares
+(``sinks.snapshot``: writer flock, compare-and-swap pointer, deferred
+GC), with the store's metadata riding in the pointer record:
 
     store/
-      v000001/part-*.parquet      agg cells for snapshot 1
-      v000002/...
-      _meta.json                  {keys, sums, current, applied: [...]}
+      snapshot_<12 hex>/part-*.parquet   agg cells of the current version
+      snapshot_<12 hex>/...              the previous version, kept for
+                                         in-flight readers until the next
+                                         apply
+      _CURRENT                           {snapshot, previous, keys, sums,
+                                          current, applied: [...]}
 
-``apply_delta`` is IDEMPOTENT per batch_id: the meta ledger records
+``apply_delta`` is IDEMPOTENT per batch_id: the pointer's ledger records
 applied ids, and a replayed batch is a recorded no-op — the property
 that makes at-least-once delivery safe, exactly as the keyed upsert
-sink's run ledger does for row merges. Nothing here scans the base
-data after init: each apply aggregates ONLY the delta (cells-sized
-shuffle), merges against the current cells-sized snapshot, and writes
-a new snapshot — the 100 TB posture is delta-sized work per refresh.
+sink's run ledger does for row merges. The ledger entry and the cells
+it describes publish in ONE atomic pointer replace, so a batch is never
+recorded without its cells or applied twice; two concurrent applies
+serialize on the writer lock (the loser raises
+``ConcurrentWriterError`` and a retry applies it). ``current`` counts
+published versions. Nothing here scans the base data after init: each
+apply aggregates ONLY the delta (cells-sized shuffle), merges against
+the current cells-sized snapshot, and publishes a new snapshot — the
+100 TB posture is delta-sized work per refresh.
 
 At cluster scale the snapshot write is a cells-sized parquet (group
 cardinality, not fact cardinality), so versioning cost is bounded by
@@ -33,31 +42,10 @@ the dimensionality of the view, never the corpus.
 
 from __future__ import annotations
 
-import json
-import os
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-_META = "_meta.json"
-
-
-def _meta_path(store: str) -> str:
-    return os.path.join(store, _META)
-
-
-def _read_meta(store: str) -> dict:
-    with open(_meta_path(store), encoding="utf-8") as f:
-        return json.load(f)
-
-
-def _write_meta(store: str, meta: dict) -> None:
-    # tmp + replace: readers never observe a torn pointer
-    fd, tmp = tempfile.mkstemp(dir=store, suffix=".tmp")
-    with os.fdopen(fd, "w", encoding="utf-8") as f:
-        json.dump(meta, f, indent=2, sort_keys=True)
-    os.replace(tmp, _meta_path(store))
+from gov_ec_pipeline_etl_spark.sinks import snapshot
 
 
 def _agg(df: DataFrame, keys: list[str], sums: dict[str, str]) -> DataFrame:
@@ -72,10 +60,6 @@ def _agg(df: DataFrame, keys: list[str], sums: dict[str, str]) -> DataFrame:
     return df.groupBy(*keys).agg(*measures)
 
 
-def _snapshot_dir(store: str, version: int) -> str:
-    return os.path.join(store, f"v{version:06d}")
-
-
 def init_store(
     spark: SparkSession,
     base_df: DataFrame,
@@ -83,54 +67,54 @@ def init_store(
     keys: list[str],
     sums: dict[str, str],
 ) -> dict:
-    """Aggregate ``base_df`` and write snapshot v1 + meta."""
-    os.makedirs(store, exist_ok=True)
-    _agg(base_df, keys, sums).write.mode("overwrite").parquet(
-        _snapshot_dir(store, 1)
-    )
-    meta = {"keys": keys, "sums": sums, "current": 1, "applied": []}
-    _write_meta(store, meta)
-    return meta
+    """Aggregate ``base_df`` and publish it as version 1."""
+    fields = {"keys": keys, "sums": sums, "current": 1, "applied": []}
+    with snapshot.writer(store) as w:
+        with w.publish(fields=fields) as path:
+            _agg(base_df, keys, sums).write.mode("overwrite").parquet(path)
+        return w.record
 
 
 def read_store(spark: SparkSession, store: str) -> DataFrame:
-    meta = _read_meta(store)
-    return spark.read.parquet(_snapshot_dir(store, meta["current"]))
+    return snapshot.read(spark, store)
 
 
 def apply_delta(
     spark: SparkSession, delta_df: DataFrame, store: str, batch_id: str
 ) -> dict:
-    """Merge ``delta_df``'s aggregate into a NEW snapshot and promote
-    it. Idempotent per ``batch_id``: a replay is a recorded no-op."""
-    meta = _read_meta(store)
-    if batch_id in meta["applied"]:
-        return {**meta, "replayed": batch_id}
-    keys, sums = meta["keys"], meta["sums"]
-    cur = read_store(spark, store)
-    d = _agg(delta_df, keys, sums)
-    measure_cols = ["n_rows", *sums]
-    z = F.lit(0).cast("bigint")
-    merged = cur.alias("a").join(
-        d.alias("b"), keys, "full_outer"
-    ).select(
-        *[F.col(k) for k in keys],
-        *[
-            (
-                F.coalesce(F.col(f"a.{m}"), z) + F.coalesce(F.col(f"b.{m}"), z)
-            ).alias(m)
-            for m in measure_cols
-        ],
-    )
-    nxt = meta["current"] + 1
-    merged.write.mode("overwrite").parquet(_snapshot_dir(store, nxt))
-    meta = {
-        **meta,
-        "current": nxt,
-        "applied": [*meta["applied"], batch_id],
-    }
-    _write_meta(store, meta)
-    return meta
+    """Merge ``delta_df``'s aggregate into a NEW snapshot and publish
+    it with ``batch_id`` in the ledger. Idempotent per ``batch_id``: a
+    replay is a recorded no-op."""
+    with snapshot.writer(store) as w:
+        snapshot.require(store)  # an uninitialized store fails loudly
+        meta = w.record
+        if batch_id in meta["applied"]:
+            return {**meta, "replayed": batch_id}
+        keys, sums = meta["keys"], meta["sums"]
+        cur = spark.read.parquet(w.current)
+        d = _agg(delta_df, keys, sums)
+        measure_cols = ["n_rows", *sums]
+        z = F.lit(0).cast("bigint")
+        merged = cur.alias("a").join(
+            d.alias("b"), keys, "full_outer"
+        ).select(
+            *[F.col(k) for k in keys],
+            *[
+                (
+                    F.coalesce(F.col(f"a.{m}"), z) + F.coalesce(F.col(f"b.{m}"), z)
+                ).alias(m)
+                for m in measure_cols
+            ],
+        )
+        fields = {
+            "keys": keys,
+            "sums": sums,
+            "current": meta["current"] + 1,
+            "applied": [*meta["applied"], batch_id],
+        }
+        with w.publish(fields=fields) as path:
+            merged.write.mode("overwrite").parquet(path)
+        return w.record
 
 
 def verify_store(
@@ -138,10 +122,10 @@ def verify_store(
 ) -> dict:
     """Recompute the view from ``full_df`` and diff cell-for-cell
     against the current snapshot (integer equality, both directions)."""
-    meta = _read_meta(store)
+    cur = read_store(spark, store)
+    meta = snapshot.pointer(store)
     keys, sums = meta["keys"], meta["sums"]
     measure_cols = ["n_rows", *sums]
-    cur = read_store(spark, store)
     ref = _agg(full_df, keys, sums)
     joined = cur.alias("a").join(ref.alias("b"), keys, "full_outer")
     mismatch = joined.where(

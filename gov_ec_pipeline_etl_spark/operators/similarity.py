@@ -26,6 +26,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from gov_ec_pipeline_etl_spark.caching import released, stage
+from gov_ec_pipeline_etl_spark.sinks import snapshot
 
 
 def as_double(vec: Column) -> Column:
@@ -432,7 +433,7 @@ def cosine_near_pairs(
 def build_ivf_index(
     vecs: DataFrame, cents: DataFrame, dim: int, path: str
 ) -> None:
-    """Materialize an IVF index as a parquet table PARTITIONED BY
+    """Publish an IVF index as the stored table ``path``, PARTITIONED BY
     centroid id.
 
     ``vecs``: (vec_id, v array<double>); ``cents``: (cent_id, cv).
@@ -454,7 +455,7 @@ def build_ivf_index(
             F.first("v").alias("v"),
         )
     )
-    assigned.write.mode("overwrite").partitionBy("cent_id").parquet(path)
+    snapshot.write(assigned, path, partition_by=["cent_id"])
 
 
 def build_ivf(
@@ -497,15 +498,11 @@ def append_to_ivf(emb: DataFrame, spark, path: str,
                   id_col: str = "vec_id", vec_col: str = "embedding") -> int:
     """Ingest new vectors into a stored IVF index: assign each to its
     nearest STORED centroid (frozen between rebuilds — the standard
-    IVF trade; re-clustering is a rebuild) and append into the
-    centroid-partitioned layout. Linear in the batch."""
-    from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
-        read_index_meta,
-        recover_index_dir,
-    )
+    IVF trade; re-clustering is a rebuild) and publish the current
+    snapshot plus the batch's centroid-partitioned files. Linear in the
+    batch."""
+    from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import read_index_meta
 
-    recover_index_dir(path + "/data")  # append must not bury a
-    # crash-stranded corpus under a fresh batch-only directory
     dim = read_index_meta(path)["dim"]
     vecs = emb.select(
         F.col(id_col).cast("long").alias("vec_id"),
@@ -525,7 +522,7 @@ def append_to_ivf(emb: DataFrame, spark, path: str,
     )
     with released(stage(assigned)) as assigned:
         n = assigned.count()
-        assigned.write.mode("append").partitionBy("cent_id").parquet(path + "/data")
+        snapshot.write(assigned, path + "/data", partition_by=["cent_id"], append=True)
     return n
 
 
@@ -540,12 +537,8 @@ def ivf_topk(
 ) -> DataFrame:
     """Top-k search against a stored IVF index built by ``build_ivf``
     (reads dim/centroids from the index itself)."""
-    from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
-        read_index_meta,
-        require_index_dir,
-    )
+    from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import read_index_meta
 
-    require_index_dir(path + "/data")
     dim = read_index_meta(path)["dim"]
     q = queries.select(
         F.col(id_col).cast("long").alias("query_id"),
@@ -555,12 +548,6 @@ def ivf_topk(
         spark, path + "/data", q, read_ivf_cents(spark, path), dim,
         nprobe=nprobe, k=k,
     )
-
-
-def compact_ivf(spark, path: str, files_per_partition: int = 1) -> dict[str, int]:
-    from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import compact_index_dir
-
-    return compact_index_dir(spark, path + "/data", "cent_id", files_per_partition)
 
 
 def ivf_search_against(
@@ -580,7 +567,7 @@ def ivf_search_against(
     reduces the index scan to the probed partitions. Rerank is exact
     cosine within those blocks: per-query work is
     O(corpus/K · nprobe), never O(corpus)."""
-    index = spark.read.parquet(index_path)
+    index = snapshot.read(spark, index_path)
     w_probe = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("cent_id")
     )
@@ -1007,7 +994,7 @@ def build_ivfpq(
     _write_ivfpq_codes(
         _pq_encode_rows(_ivf_assign(vecs, cents, dim), codebook, d, m),
         path,
-        mode="overwrite",
+        append=False,
     )
     _write_index_meta(
         path,
@@ -1021,9 +1008,10 @@ def build_ivfpq(
     )
 
 
-def _write_ivfpq_codes(code_rows: DataFrame, path: str, mode: str) -> int:
+def _write_ivfpq_codes(code_rows: DataFrame, path: str, append: bool) -> int:
     """Pack (vec_id, cent_id, sub, code) rows into one array row per
-    vector and write partitioned by cent_id. Returns rows written."""
+    vector and publish them partitioned by cent_id (with ``append``, on
+    top of the current snapshot). Returns rows written."""
     wide = code_rows.groupBy("vec_id", "cent_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct(F.col("sub"), F.col("code")))),
@@ -1032,18 +1020,13 @@ def _write_ivfpq_codes(code_rows: DataFrame, path: str, mode: str) -> int:
     )
     with released(stage(wide)) as wide:
         n = wide.count()
-        wide.write.mode(mode).partitionBy("cent_id").parquet(path + "/data")
+        snapshot.write(wide, path + "/data", partition_by=["cent_id"], append=append)
     return n
 
 
 def _read_ivfpq_code_rows(spark, path: str) -> DataFrame:
     """Stored wide codes back to (vec_id, cent_id, sub, code) rows."""
-    from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
-        require_index_dir,
-    )
-
-    require_index_dir(path + "/data")
-    return spark.read.parquet(path + "/data").select(
+    return snapshot.read(spark, path + "/data").select(
         "vec_id", "cent_id", F.posexplode("codes").alias("sub", "code")
     )
 
@@ -1054,14 +1037,10 @@ def append_to_ivfpq(
 ) -> int:
     """Ingest new vectors: assign to the STORED centroids, encode with
     the STORED codebooks (both frozen between rebuilds — the standard
-    IVF/PQ trade), append into the partitioned code table. Linear in
-    the batch; corpus rows never rewritten."""
-    from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
-        read_index_meta,
-        recover_index_dir,
-    )
+    IVF/PQ trade), publish them on top of the partitioned code table.
+    Linear in the batch; corpus rows never rewritten."""
+    from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import read_index_meta
 
-    recover_index_dir(path + "/data")  # see append_to_ivf
     meta = read_index_meta(path)
     dim, m = meta["dim"], meta["m"]
     vecs = emb.select(
@@ -1073,7 +1052,7 @@ def append_to_ivfpq(
     rows = _pq_encode_rows(
         _ivf_assign(vecs, cents, dim), codebook, dim // m, m
     )
-    return _write_ivfpq_codes(rows, path, mode="append")
+    return _write_ivfpq_codes(rows, path, append=True)
 
 
 def ivfpq_topk_stored(

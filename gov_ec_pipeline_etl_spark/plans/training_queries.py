@@ -1516,14 +1516,13 @@ def w06_countmin_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "jaccard", "stored-index", "llm-pipeline"),
 )
 def u14_ngram_index_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
         ngram_pairs_from_index,
         write_ngram_index,
     )
+    from gov_ec_pipeline_etl_spark.streaming.staging import session_staging_dir
 
-    path = tempfile.mkdtemp(prefix="ngram_index_") + "/idx"
+    path = session_staging_dir("ngram_index")
     write_ngram_index(
         _dirty_docs(spark, sf_dir), "doc_id", "text", path, k=3, max_df=50
     )
@@ -2051,19 +2050,18 @@ def u16_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "incremental", "stored-index", "llm-pipeline"),
 )
 def u17_ngram_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
         ngram_incremental_against_index,
         write_ngram_index,
     )
+    from gov_ec_pipeline_etl_spark.streaming.staging import session_staging_dir
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
     arrivals = docs.where(F.col("doc_id") % 5 == 0).select(
         (F.col("doc_id") + MUT_OFFSET).alias("doc_id"),
         F.concat("text", F.lit(" zz0 zz1 zz2")).alias("text"),
     )
-    path = tempfile.mkdtemp(prefix="ngram_inc_") + "/idx"
+    path = session_staging_dir("ngram_inc")
     write_ngram_index(docs, "doc_id", "text", path, k=3, max_df=50)
     return ngram_incremental_against_index(
         arrivals, spark, path, threshold=0.5

@@ -16,7 +16,8 @@ engine-native equivalent is a set-based MERGE:
   Partitioned targets take the PARTITION-SCOPED path: semi-derive the
   partitions the updates touch, anti-join matched keys within only
   those partitions, and rewrite only those partition directories via
-  dynamic partition overwrite — untouched partitions are neither read
+  dynamic partition overwrite (a write option; the session conf is never
+  touched) — untouched partitions are neither read
   nor rewritten, so a weekly load is O(touched), not O(table), at
   100 TB. Unpartitioned targets use snapshot-rewrite with an atomic
   pointer swap. Both are idempotent by construction (same input twice →
@@ -30,9 +31,14 @@ key can never change partition). If updates may move a key across
 partitions, pass ``allow_partition_move=True`` to fall back to the
 full-table merge.
 
-Snapshot GC is deferred one generation: the previous snapshot survives
-the pointer swap (a concurrent reader that resolved the old pointer can
-finish its scan) and is deleted by the NEXT successful upsert.
+Every write here — the full and the scoped merge, compaction, keyed
+delete and retention — publishes through ``sinks.snapshot``, the one
+protocol the stored indexes and the IVM store use too: a fresh
+``snapshot_<12 hex>`` directory, a compare-and-swap of the ``_CURRENT``
+pointer under the ``_WRITER_LOCK`` flock, and GC deferred one
+generation (the previous snapshot survives the swap, so a reader that
+resolved the old pointer can finish its scan; the NEXT publish deletes
+it). A write that raises leaves no snapshot directory behind.
 """
 
 from __future__ import annotations
@@ -40,90 +46,26 @@ from __future__ import annotations
 import contextlib
 import datetime as _dt
 import functools
-import json
 import operator
 import os
 import shutil
-import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-_POINTER = "_CURRENT"
-_LOCK = "_WRITER_LOCK"
+from gov_ec_pipeline_etl_spark.sinks import snapshot
+from gov_ec_pipeline_etl_spark.sinks.snapshot import LOCK as _LOCK  # noqa: F401
+from gov_ec_pipeline_etl_spark.sinks.snapshot import ConcurrentWriterError  # noqa: F401
+
+_current_snapshot = snapshot.current
+_swap_pointer = snapshot.swap_pointer
 
 
-class ConcurrentWriterError(RuntimeError):
-    """Two writers raced on one target: the second either found the
-    advisory lock held by a live process, or (if the lock was broken)
-    the pointer moved between its read and its swap. The losing merge
-    fails CLEANLY — the table still holds exactly the winner's state,
-    never a silent last-writer-wins overwrite that drops a merge.
-    Retry the failed load; idempotency makes the retry safe."""
-
-
-@contextlib.contextmanager
-def _writer_lock(target_dir: str):
-    """Advisory exclusive writer lock via ``fcntl.flock``.
-
-    Lock ownership lives in the KERNEL on the open file description,
-    which eliminates the entire failure taxonomy an existence-based
-    lockfile scheme has to mitigate case by case:
-
-    - a crashed writer's lock is released automatically — no stale-lock
-      detection, no pid-liveness heuristics, no breaking protocol;
-    - acquisition is one atomic syscall (``LOCK_EX | LOCK_NB``) — no
-      read-then-break TOCTOU, and no instant where the lock path is
-      vacant mid-handover (the unfixable flaw of every break-and-relink
-      scheme: between renaming a suspect lock aside and restoring it, a
-      third writer can acquire the vacant path);
-    - the lockfile's CONTENT (owner pid) is diagnostics only, so a
-      garbled or empty file can never cause a wrong decision.
-
-    The lockfile is created once and never removed (removing it would
-    reintroduce a race: a contender holding an flock on an unlinked
-    inode while a newcomer locks the recreated file — two holders).
-    Same-host scope is unchanged from the previous scheme (flock over
-    NFS is historically unreliable); on a shared filesystem the CAS in
-    ``_swap_pointer`` remains the authoritative cross-host guard (the
-    reference's own commit protocol is single-writer too; its 409
-    handling — load.py:534-603 — is the analogous race
-    acknowledgment)."""
-    import fcntl
-
-    lock = os.path.join(target_dir, _LOCK)
-    fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        except OSError:
-            owner = ""
-            with contextlib.suppress(OSError):
-                owner = os.read(fd, 64).decode(errors="replace").strip()
-            raise ConcurrentWriterError(
-                f"writer lock {lock} held by live pid {owner or 'unknown'}; "
-                "concurrent merges on one target are serialized — retry"
-            ) from None
-        with contextlib.suppress(OSError):
-            os.ftruncate(fd, 0)
-            os.write(fd, str(os.getpid()).encode())
-        try:
-            yield
-        finally:
-            with contextlib.suppress(OSError):
-                os.ftruncate(fd, 0)  # clear the diagnostic pid
-    finally:
-        os.close(fd)  # closing the fd releases the flock
-
-
-def _current_snapshot(target_dir: str) -> str | None:
-    ptr = os.path.join(target_dir, _POINTER)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr, encoding="utf-8") as f:
-        name = json.load(f)["snapshot"]
-    path = os.path.join(target_dir, name)
-    return path if os.path.exists(path) else None
+def _writer(target_dir: str):
+    """The sink's writer: the snapshot protocol, with the pointer swap
+    looked up in this module at call time (so it can be failed here,
+    between a snapshot's write and its publish)."""
+    return snapshot.writer(target_dir, swap=_swap_pointer)
 
 
 def read_table(spark: SparkSession, target_dir: str) -> DataFrame | None:
@@ -131,23 +73,31 @@ def read_table(spark: SparkSession, target_dir: str) -> DataFrame | None:
     return spark.read.parquet(snap) if snap else None
 
 
+def _partition_predicate(touched: list, partition_by: list[str]) -> F.Column:
+    """OR-of-ANDs selecting the given partition tuples (rows keyed by
+    the partition columns). eqNullSafe so a null partition value selects
+    its partition's rows rather than evaluating to null."""
+    return functools.reduce(
+        operator.or_,
+        [
+            functools.reduce(
+                operator.and_,
+                [F.col(c).eqNullSafe(F.lit(row[c])) for c in partition_by],
+            )
+            for row in touched
+        ],
+    )
+
+
 def _touched_partition_filter(
     updates: DataFrame, partition_by: list[str]
 ) -> tuple[F.Column, int]:
-    """(predicate, n_touched): OR-of-ANDs over the distinct partition
-    tuples present in the updates. Partition tuples are driver-scale
-    metadata (bounded by the partition count, not the data), like any
-    catalog pruning list. eqNullSafe so null partition values prune
-    correctly."""
+    """(predicate, n_touched) over the distinct partition tuples present
+    in the updates. Partition tuples are driver-scale metadata (bounded
+    by the partition count, not the data), like any catalog pruning
+    list."""
     touched = updates.select(*partition_by).distinct().collect()
-    clauses = [
-        functools.reduce(
-            operator.and_,
-            [F.col(c).eqNullSafe(F.lit(row[c])) for c in partition_by],
-        )
-        for row in touched
-    ]
-    return functools.reduce(operator.or_, clauses), len(touched)
+    return _partition_predicate(touched, partition_by), len(touched)
 
 
 def upsert_parquet(
@@ -180,18 +130,17 @@ def upsert_parquet(
     the audit is O(table keys) per load where the merge itself is
     O(touched); run it on a schedule, or permanently if a thin key
     column read is acceptable per load."""
-    os.makedirs(target_dir, exist_ok=True)
     # The update batch is read several times (count, touched-partition
     # derivation, match count, the merge itself); persist it so an
     # expensive upstream lineage — the whole contract pipeline feeds
     # straight in here — is computed once, not per pass.
     updates = updates.dropDuplicates([key]).persist()
     try:
-        with _writer_lock(target_dir):
+        with _writer(target_dir) as w:
             return _upsert_parquet(
                 spark,
                 updates,
-                target_dir,
+                w,
                 key,
                 partition_by,
                 allow_partition_move,
@@ -211,14 +160,14 @@ class PartitionMoveError(RuntimeError):
 def _upsert_parquet(
     spark: SparkSession,
     updates: DataFrame,
-    target_dir: str,
+    w: snapshot.Writer,
     key: str,
     partition_by: list[str] | None,
     allow_partition_move: bool,
     verify_no_partition_move: bool,
 ) -> dict[str, int]:
-    snap0 = _current_snapshot(target_dir)  # what this merge READS: the CAS expect
-    current = spark.read.parquet(snap0) if snap0 else None
+    # the snapshot this merge READS, under the lock: the CAS expectation
+    current = spark.read.parquet(w.current) if w.current else None
     n_updates = updates.count()  # also materializes the persisted batch
 
     if n_updates == 0:
@@ -240,10 +189,10 @@ def _upsert_parquet(
         current is not None
         and partition_by
         and not allow_partition_move
-        and _has_partition_dirs(snap0)
+        and _has_partition_dirs(w.current)
     ):
         metrics = _merge_touched_partitions(
-            spark, updates, target_dir, key, partition_by, n_updates
+            spark, current, updates, w, key, partition_by, n_updates
         )
         if verify_no_partition_move:
             # count against the PRE-merge table state (its snapshot is
@@ -272,20 +221,11 @@ def _upsert_parquet(
             updates.select(key), key, "left_anti"
         ).unionByName(updates, allowMissingColumns=True)
 
-    snap_name = f"snapshot_{uuid.uuid4().hex[:12]}"
-    snap_path = os.path.join(target_dir, snap_name)
-    writer = merged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(snap_path)
-
-    _swap_pointer(
-        target_dir, snap_name,
-        expect=os.path.basename(snap0) if snap0 else None,
-    )
-    _gc_snapshots(
-        target_dir, keep={snap_name, os.path.basename(snap0 or "")}
-    )
+    with w.publish() as snap_path:
+        writer = merged.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(snap_path)
 
     return {
         "rows_upserted": n_updates,
@@ -296,8 +236,9 @@ def _upsert_parquet(
 
 def _merge_touched_partitions(
     spark: SparkSession,
+    current: DataFrame,
     updates: DataFrame,
-    target_dir: str,
+    w: snapshot.Writer,
     key: str,
     partition_by: list[str],
     n_updates: int,
@@ -313,14 +254,13 @@ def _merge_touched_partitions(
     operation, no data copied; the local-FS analogue of a table
     format's manifest re-pointing, which Delta/Iceberg provide on
     object stores) and the touched partitions are then replaced there
-    via dynamic partition overwrite. The pointer swaps only after the
+    via dynamic partition overwrite (a write option, never the session
+    conf). The pointer swaps only after the
     write commits, so a crash at ANY point leaves the current snapshot
     and pointer intact, and concurrent readers never observe a
     partition mid-replacement. Deleting superseded files during
     deferred GC only drops links; inodes shared with live snapshots
     survive."""
-    snap = _current_snapshot(target_dir)
-    current = spark.read.parquet(snap)
     pred, n_touched = _touched_partition_filter(updates, partition_by)
     cur_touched = current.where(pred)
     n_matched = cur_touched.join(updates.select(key), key, "left_semi").count()
@@ -328,24 +268,10 @@ def _merge_touched_partitions(
         updates.select(key), key, "left_anti"
     ).unionByName(updates, allowMissingColumns=True)
 
-    snap_name = f"snapshot_{uuid.uuid4().hex[:12]}"
-    snap_path = os.path.join(target_dir, snap_name)
-    shutil.copytree(snap, snap_path, copy_function=os.link)
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(*partition_by).parquet(snap_path)
-    except BaseException:
-        # the write never published: drop the half-built snapshot so it
-        # can't be mistaken for live data; the pointer still names the
-        # old snapshot
-        shutil.rmtree(snap_path, ignore_errors=True)
-        raise
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-    _swap_pointer(target_dir, snap_name, expect=os.path.basename(snap))
-    _gc_snapshots(target_dir, keep={snap_name, os.path.basename(snap)})
+    with w.publish(link=True) as snap_path:
+        merged.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(*partition_by).parquet(snap_path)
 
     return {
         "rows_upserted": n_updates,
@@ -353,53 +279,6 @@ def _merge_touched_partitions(
         "rows_inserted": n_updates - n_matched,
         "partitions_rewritten": n_touched,
     }
-
-
-_UNSET = object()
-
-
-def _swap_pointer(target_dir: str, snap_name: str, expect=_UNSET) -> None:
-    """Atomically re-point the table at ``snap_name``.
-
-    ``expect`` (a snapshot basename or None) is the snapshot this
-    writer's merge READ: if the pointer no longer names it, another
-    writer committed meanwhile and publishing would silently drop that
-    merge — the half-built snapshot is removed and the swap fails with
-    ``ConcurrentWriterError`` instead (compare-and-swap under the
-    advisory lock; the residual check-to-replace window exists only
-    when the lock was wrongly broken)."""
-    ptr = os.path.join(target_dir, _POINTER)
-    if expect is not _UNSET:
-        cur = None
-        if os.path.exists(ptr):
-            with open(ptr, encoding="utf-8") as f:
-                cur = json.load(f)["snapshot"]
-        if cur != expect:
-            shutil.rmtree(os.path.join(target_dir, snap_name), ignore_errors=True)
-            raise ConcurrentWriterError(
-                f"pointer moved during merge (read {expect!r}, now {cur!r}); "
-                "another writer committed — this merge was NOT published, retry"
-            )
-    tmp = os.path.join(target_dir, f".{_POINTER}.tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        # "previous" records the LINEAGE (the snapshot this write read),
-        # so snapshot_changes diffs against the true predecessor — an
-        # mtime heuristic would pick up half-written strays from a
-        # hard-killed merge, whose rmtree-on-exception never ran
-        rec = {"snapshot": snap_name}
-        if expect is not _UNSET:
-            rec["previous"] = expect
-        json.dump(rec, f)
-    os.replace(tmp, os.path.join(target_dir, _POINTER))
-
-
-def _gc_snapshots(target_dir: str, keep: set[str]) -> None:
-    """Deferred GC: the just-replaced snapshot is in ``keep`` and
-    survives until the next upsert, so concurrent readers that resolved
-    the old pointer can finish (single-writer assumed, readers any)."""
-    for name in os.listdir(target_dir):
-        if name.startswith("snapshot_") and name not in keep:
-            shutil.rmtree(os.path.join(target_dir, name), ignore_errors=True)
 
 
 def compact_partitions(
@@ -429,25 +308,24 @@ def compact_partitions(
     producing exactly N files).
     """
     if _current_snapshot(target_dir) is None:
-        # nonexistent/empty table: nothing to compact, and taking the
-        # writer lock would fail on a directory that doesn't exist yet
+        # nonexistent table: nothing to compact (and no directory to
+        # create a writer lock in)
         return {"files_before": 0, "files_after": 0}
-    with _writer_lock(target_dir):
-        return _compact_partitions(
-            spark, target_dir, partition_by, files_per_partition
-        )
+    with _writer(target_dir) as w:
+        if w.current is None or not _has_data_files(w.current):
+            # a zero-file snapshot (an index whose every row was cut)
+            # has no schema to read back and nothing to compact
+            return {"files_before": 0, "files_after": 0}
+        return _compact_partitions(spark, w, partition_by, files_per_partition)
 
 
 def _compact_partitions(
     spark: SparkSession,
-    target_dir: str,
+    w: snapshot.Writer,
     partition_by: list[str] | None,
     files_per_partition: int,
 ) -> dict[str, int]:
-    snap = _current_snapshot(target_dir)
-    if snap is None:
-        return {"files_before": 0, "files_after": 0}
-    current = spark.read.parquet(snap)
+    current = spark.read.parquet(w.current)
     files_before = len(current.inputFiles())
     if current.isEmpty():
         # an emptied table (delete-all / full retention) has nothing to
@@ -470,18 +348,14 @@ def _compact_partitions(
             max_records = -(-int(biggest) // files_per_partition)  # ceil
     else:
         compacted = current.coalesce(files_per_partition)
-    snap_name = f"snapshot_{uuid.uuid4().hex[:12]}"
-    writer = compacted.write.mode("overwrite")
-    if max_records is not None:
-        writer = writer.option("maxRecordsPerFile", max_records)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(os.path.join(target_dir, snap_name))
-    _swap_pointer(target_dir, snap_name, expect=os.path.basename(snap))
-    _gc_snapshots(target_dir, keep={snap_name, os.path.basename(snap)})
-    files_after = len(
-        spark.read.parquet(os.path.join(target_dir, snap_name)).inputFiles()
-    )
+    with w.publish() as snap_path:
+        writer = compacted.write.mode("overwrite")
+        if max_records is not None:
+            writer = writer.option("maxRecordsPerFile", max_records)
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(snap_path)
+    files_after = len(spark.read.parquet(snap_path).inputFiles())
     return {"files_before": files_before, "files_after": files_after}
 
 
@@ -577,8 +451,7 @@ def snapshot_changes(
     # half-written stray snapshot dir (its rmtree-on-exception never
     # ran) that is newer than the real predecessor, and diffing against
     # it would fabricate inserted/changed rows in the post-mortem tool
-    with open(os.path.join(target_dir, _POINTER), encoding="utf-8") as f:
-        prev_name = json.load(f).get("previous")
+    prev_name = snapshot.pointer(target_dir).get("previous")
     prev = []
     if prev_name:
         p = os.path.join(target_dir, prev_name)
@@ -708,53 +581,30 @@ def delete_keys(
     silently keep its old rows)."""
     keys = keys.select(key).dropDuplicates([key]).persist()
     try:
-        with _writer_lock(target_dir):
-            snap0 = _current_snapshot(target_dir)
-            if snap0 is None:
+        with _writer(target_dir) as w:
+            if w.current is None:
                 return {"rows_deleted": 0, "partitions_rewritten": 0}
-            current = spark.read.parquet(snap0)
+            current = spark.read.parquet(w.current)
             # partition surgery requires the snapshot to PHYSICALLY
             # have partition dirs; the empty-table fallback (and any
             # unpartitioned layout) takes the full-rewrite path below
-            if partition_by and _has_partition_dirs(snap0):
+            if partition_by and _has_partition_dirs(w.current):
                 touched_rows = (
                     current.select(key, *partition_by)
                     .join(keys, key, "left_semi")
                 )
-                touched = [
-                    tuple(r[c] for c in partition_by)
-                    for r in touched_rows.select(*partition_by)
-                    .distinct()
-                    .collect()
-                ]
+                touched = touched_rows.select(*partition_by).distinct().collect()
                 n_deleted = touched_rows.count()
                 if not touched:
                     return {"rows_deleted": 0, "partitions_rewritten": 0}
-                # eqNullSafe: a null partition value must select its
-                # partition's rows, not evaluate to null and silently
-                # drop the survivors from the append-back
-                pred = functools.reduce(
-                    operator.or_,
-                    [
-                        functools.reduce(
-                            operator.and_,
-                            [
-                                F.col(c).eqNullSafe(F.lit(v))
-                                for c, v in zip(partition_by, t)
-                            ],
-                        )
-                        for t in touched
-                    ],
-                )
-                remaining = current.where(pred).join(keys, key, "left_anti")
-                snap_name = f"snapshot_{uuid.uuid4().hex[:12]}"
-                snap_path = os.path.join(target_dir, snap_name)
-                shutil.copytree(snap0, snap_path, copy_function=os.link)
-                try:
+                remaining = current.where(
+                    _partition_predicate(touched, partition_by)
+                ).join(keys, key, "left_anti")
+                with w.publish(link=True) as snap_path:
                     for t in touched:
                         d = os.path.join(
                             snap_path,
-                            *[_partition_dirname(c, v) for c, v in zip(partition_by, t)],
+                            *[_partition_dirname(c, t[c]) for c in partition_by],
                         )
                         # touched tuples come FROM the table: a missing
                         # dir means the rendered name doesn't match the
@@ -776,16 +626,6 @@ def delete_keys(
                         # append wrote zero part files — publishable
                         # snapshots must stay readable
                         _write_empty_snapshot(spark, current.schema, snap_path)
-                except BaseException:
-                    shutil.rmtree(snap_path, ignore_errors=True)
-                    raise
-                _swap_pointer(
-                    target_dir, snap_name, expect=os.path.basename(snap0)
-                )
-                _gc_snapshots(
-                    target_dir,
-                    keep={snap_name, os.path.basename(snap0)},
-                )
                 return {
                     "rows_deleted": n_deleted,
                     "partitions_rewritten": len(touched),
@@ -798,19 +638,8 @@ def delete_keys(
                 # an empty frame writes ZERO part files (unreadable
                 # schema) unless it carries at least one partition
                 remaining = remaining.repartition(1)
-            snap_name = f"snapshot_{uuid.uuid4().hex[:12]}"
-            snap_path = os.path.join(target_dir, snap_name)
-            try:
+            with w.publish() as snap_path:
                 remaining.write.mode("overwrite").parquet(snap_path)
-            except BaseException:
-                shutil.rmtree(snap_path, ignore_errors=True)
-                raise
-            _swap_pointer(
-                target_dir, snap_name, expect=os.path.basename(snap0)
-            )
-            _gc_snapshots(
-                target_dir, keep={snap_name, os.path.basename(snap0)}
-            )
             return {"rows_deleted": n_deleted, "partitions_rewritten": 0}
     finally:
         keys.unpersist()
@@ -836,17 +665,16 @@ def drop_partitions(
     directory listing, never against rows."""
     if isinstance(keep, str):
         keep = F.expr(keep)
-    with _writer_lock(target_dir):
-        snap0 = _current_snapshot(target_dir)
-        if snap0 is None:
+    with _writer(target_dir) as w:
+        if w.current is None:
             return {"partitions_dropped": 0, "partitions_kept": 0}
         # partition tuples from the DIRECTORY layout (no data read):
         # spark reads only footers/schema lazily; select the partition
         # columns distinct — column-pruned to zero data columns, and at
         # worst footer-metadata-bounded
+        current = spark.read.parquet(w.current)
         tuples = (
-            spark.read.parquet(snap0)
-            .select(*partition_by)
+            current.select(*partition_by)
             .distinct()
             .withColumn("__keep", keep)
             .collect()
@@ -868,10 +696,7 @@ def drop_partitions(
         drop_t = [t for t in tuples if not t["__keep"]]
         if not drop_t:
             return {"partitions_dropped": 0, "partitions_kept": len(keep_t)}
-        snap_name = f"snapshot_{uuid.uuid4().hex[:12]}"
-        snap_path = os.path.join(target_dir, snap_name)
-        try:
-            shutil.copytree(snap0, snap_path, copy_function=os.link)
+        with w.publish(link=True) as snap_path:
             for t in drop_t:
                 d = os.path.join(
                     snap_path,
@@ -888,15 +713,9 @@ def drop_partitions(
             if not _has_data_files(snap_path):
                 # every partition failed retention: keep the snapshot
                 # readable (schema-bearing empty file, not zero files);
-                # snap0 is untouched here, so its schema is available
-                _write_empty_snapshot(
-                    spark, spark.read.parquet(snap0).schema, snap_path
-                )
-        except BaseException:
-            shutil.rmtree(snap_path, ignore_errors=True)
-            raise
-        _swap_pointer(target_dir, snap_name, expect=os.path.basename(snap0))
-        _gc_snapshots(target_dir, keep={snap_name, os.path.basename(snap0)})
+                # the previous snapshot is untouched, so its schema is
+                # available
+                _write_empty_snapshot(spark, current.schema, snap_path)
         return {
             "partitions_dropped": len(drop_t),
             "partitions_kept": len(keep_t),

@@ -19,9 +19,10 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
-import tempfile
 from dataclasses import dataclass
 from typing import Any
+
+from gov_ec_pipeline_etl_spark.sinks.snapshot import write_json
 
 TRACKED_FIELDS = ("last_modified", "size", "url", "format")
 
@@ -110,17 +111,4 @@ def load_state(path: str) -> ResourceState | None:
 
 def save_state(state: ResourceState, path: str) -> None:
     """Atomic write: tmp file in the same directory, then rename."""
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    payload = json.dumps(
-        {"resources": state.resources}, indent=2, sort_keys=True
-    )
-    fd, tmp = tempfile.mkstemp(
-        dir=os.path.dirname(path) or ".", suffix=".tmp"
-    )
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write(payload)
-        os.replace(tmp, path)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+    write_json(path, {"resources": state.resources})

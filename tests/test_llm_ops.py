@@ -373,15 +373,15 @@ def test_multi_probe_lsh_improves_recall(spark):
 
 def test_incremental_neardup_against_stored_sketch(spark, tmp_path):
     """The stored-sketch incremental path must reproduce exactly what a
-    from-scratch asymmetric check computes: write the corpus sketch,
-    read it back, and check a mutated-arrival batch against it."""
+    from-scratch asymmetric check computes: build the corpus sketch
+    index, read it back, and check a mutated-arrival batch against it."""
     from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
+        build_sketch_index,
         incremental_neardup_against,
         minhash_band_keys,
         minhash_sketch,
         jaccard_verify,
-        read_sketch_table,
-        write_sketch_table,
+        read_sketch_index,
     )
 
     corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
@@ -393,8 +393,8 @@ def test_incremental_neardup_against_stored_sketch(spark, tmp_path):
     )
 
     path = str(tmp_path / "corpus_sketch")
-    write_sketch_table(minhash_sketch(corpus, "doc_id", "text", 3), path)
-    stored = read_sketch_table(spark, path)
+    build_sketch_index(corpus, "doc_id", "text", path, k=3)
+    stored = read_sketch_index(spark, path)
 
     got = sorted(
         map(
@@ -762,7 +762,11 @@ def test_ngram_stored_index_matches_inline(spark, tmp_path, docs_df):
         )
     )
     assert stored == inline and len(stored) > 0
-    assert any(d.startswith("hb=") for d in os.listdir(path + "/kept"))
+    from gov_ec_pipeline_etl_spark.sinks import snapshot
+
+    assert any(
+        d.startswith("hb=") for d in os.listdir(snapshot.current(path + "/kept"))
+    )
     assert os.path.isdir(path + "/head")
 
 
@@ -1346,7 +1350,9 @@ def test_ivfpq_index_lifecycle_cli(spark, tmp_path, capsys):
     assert stats["rows"] == 60 and stats["kind"] == "ivfpq"
 
     # the raw vectors are NOT in the index: only codes
-    files = spark.read.parquet(idx + "/data")
+    from gov_ec_pipeline_etl_spark.sinks import snapshot
+
+    files = spark.read.parquet(snapshot.current(idx + "/data"))
     assert set(files.columns) == {"vec_id", "codes", "cent_id"}
 
     # stored search == in-memory search (same seeding, same arithmetic)
@@ -2017,63 +2023,6 @@ def test_xent_terciles_exact_thirds_and_tie_break(spark):
     assert Counter(b for _x, b in got.values()) == Counter(
         {"head": 3, "middle": 3, "tail": 3}
     )
-
-
-def test_compact_crash_recovery(spark, tmp_path):
-    """Code-review r5: compaction promotes through a deterministic
-    .old rename pair; a crash between the two renames leaves only
-    kept.old. recover_index_dir (called by every reader and by the
-    next compaction) must restore the layout with one rename — an
-    index is never stranded without a data directory."""
-    import os
-
-    from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
-        read_ngram_index,
-        recover_index_dir,
-        write_ngram_index,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma word{i} delta epsilon") for i in range(20)],
-        ["doc_id", "text"],
-    )
-    idx = str(tmp_path / "idx")
-    write_ngram_index(docs, "doc_id", "text", idx)
-    before = sorted(tuple(r) for r in read_ngram_index(spark, idx).collect())
-    assert before
-
-    kept = idx + "/kept"
-    os.rename(kept, kept + ".old")  # crash window: no data directory
-    assert not os.path.exists(kept)
-    # pure readers fail LOUDLY with the remedy (a reader must not
-    # rename directories under an in-flight promote)
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError, match="compaction crashed"):
-        read_ngram_index(spark, idx).collect()
-    # maintenance recovers with one rename; the reader then matches
-    assert recover_index_dir(kept) is True
-    after = sorted(tuple(r) for r in read_ngram_index(spark, idx).collect())
-    assert after == before
-    assert os.path.exists(kept) and not os.path.exists(kept + ".old")
-    assert recover_index_dir(kept) is False  # idempotent no-op now
-
-    # an APPENDER hitting the crash window recovers BEFORE writing —
-    # mode('append') would otherwise create a fresh batch-only dir and
-    # the next compaction's .old cleanup would delete the real corpus
-    from gov_ec_pipeline_etl_spark.operators.dedup_fuzzy import (
-        append_to_ngram_index,
-    )
-
-    os.rename(kept, kept + ".old")
-    more = spark.createDataFrame(
-        [(900, "zeta eta theta iota kappa uniqword900")], ["doc_id", "text"]
-    )
-    append_to_ngram_index(more, spark, idx)
-    merged = read_ngram_index(spark, idx)
-    ids = {r.id for r in merged.select("id").distinct().collect()}
-    assert 900 in ids and len(ids) == 21  # corpus restored + batch added
-    assert not os.path.exists(kept + ".old")
 
 
 def test_bpe_exhausted_steps_keeps_vocab(spark):
