@@ -3,13 +3,16 @@
 Compiles the declarative contract into ONE lazy transformation chain
 (reference fixed order, etl/transform.py:432-579: normalize names →
 rename → NA/trim/drop-null → coerce → derive → categories → numeric
-bounds → keys → dedup → pad/drift → reorder) plus a single validation
-aggregate pass that feeds the report and the fail-fast gates.
+bounds → keys → dedup → pad/drift → reorder). ``keyed`` builds the chain
+up to the keys, ``finish`` the rest; neither starts a job.
 
-Contrast with the reference's execution (SURVEY.md §4): each step there
-eagerly copied the whole pandas frame; here the chain is one Catalyst
-plan — steps fuse into a handful of projections inside whole-stage
-codegen, and only the report aggregation and the sink action execute.
+``apply`` runs two actions before any sink work: the raw ``count()``
+(``rows_in``, no contract step runs) and one aggregate over the keyed,
+pre-dedup frame that yields every other report figure and feeds the
+fail-fast gates. Contrast with the reference's execution (SURVEY.md §4):
+each step there eagerly copied the whole pandas frame; here the chain is
+one Catalyst plan — steps fuse into a handful of projections inside
+whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -18,7 +21,7 @@ from dataclasses import dataclass
 from typing import Any
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import DoubleType, StringType, TimestampType
 
 from gov_ec_pipeline_etl_spark.contract.model import Contract, TransformHardFail
@@ -208,11 +211,35 @@ class ContractPipeline:
         packed = F.when(packed == "{}", F.lit(None)).otherwise(packed)
         return df.withColumn(c.extras_column, packed).drop(*extra_cols)
 
+    def keyed(self, df: DataFrame) -> DataFrame:
+        """normalize → coerce → derive → rules → keys: the frame the
+        validation aggregate reads."""
+        df = self.normalize(df)
+        df = self.coerce(df)
+        df = self.derive(df)
+        df = self.apply_rules(df)
+        return self.add_keys(df)
+
+    def finish(self, df: DataFrame) -> tuple[DataFrame, dict]:
+        """dedup → pad/drift → reorder over a ``keyed`` frame."""
+        return self.pad_and_reorder(self.dedup(df))
+
     # --- validation (one aggregate pass) --------------------------------
 
-    def _agg_exprs(self, df: DataFrame) -> dict[str, F.Column]:
+    def _metrics(self, keyed: DataFrame) -> dict[str, Any]:
+        """Every report aggregate in one action over the ``keyed``,
+        pre-dedup frame. ``__key_rn`` numbers the rows within a business
+        key: rn == 1 counts the keys (the rows dedup keeps), rn == 2 the
+        keys that occur twice or more."""
         c = self.c
-        aggs: dict[str, F.Column] = {"rows_out": F.count(F.lit(1))}
+        w = Window.partitionBy("business_key").orderBy("business_key")
+        df = keyed.withColumn("__key_rn", F.row_number().over(w))
+        rn = F.col("__key_rn")
+        aggs: dict[str, F.Column] = {
+            "rows_out": F.count(F.lit(1)),
+            "distinct_keys": F.count(F.when(rn == 1, 1)),
+            "duplicates_business_key": F.count(F.when(rn == 2, 1)),
+        }
         for item in c.critical:
             if isinstance(item, str):
                 aggs[f"critical::{item}"] = (
@@ -239,64 +266,29 @@ class ContractPipeline:
                     part = F.lit(True)
                 null_any = null_any | part
             aggs["key_null_rows"] = F.sum(F.when(null_any, 1).otherwise(0))
-        return aggs
-
-    def attach_observed_metrics(self, df: DataFrame):
-        """Single-pass variant of the validation aggregate.
-
-        Attaches the same expressions ``_agg_exprs`` builds (critical /
-        any-of / recommended non-null counts, key-null rows, pre-dedup
-        row count) as a Spark ``Observation``, so the metrics are
-        collected DURING the next action over ``df`` — e.g. the staging
-        write — instead of costing a separate full execution of the
-        lineage. At 100 TB the eager ``apply()`` protocol re-executes
-        the pipeline per metrics pass; this rides the write for free.
-        Returns ``(observed_df, observation)``; read
-        ``observation.get`` after any action has consumed the frame.
-        """
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        aggs = self._agg_exprs(df)
-        return df.observe(obs, *[v.alias(k) for k, v in aggs.items()]), obs
+        return df.agg(*[v.alias(k) for k, v in aggs.items()]).first().asDict()
 
     # --- end-to-end ------------------------------------------------------
 
     def apply(self, df: DataFrame, fail_fast: bool = True) -> TransformResult:
         c = self.c
         report: dict[str, Any] = {"dataset": c.dataset}
-        rows_in = df.count()
-        report["rows_in"] = rows_in
+        report["rows_in"] = df.count()
 
-        df = self.normalize(df)
-        df = self.coerce(df)
-        df = self.derive(df)
-        df = self.apply_rules(df)
-        df = self.add_keys(df)
+        keyed = self.keyed(df)
+        df, drift = self.finish(keyed)
 
         # Validation metrics EVALUATE on the pre-dedup frame (reference
         # K3: quarantine/critical counts see every arriving row; dedup
-        # then keeps one representative per key). The aggregate's
-        # count(*) doubles as the pre-dedup row count, so dedup
-        # accounting costs no extra pass.
-        pre_aggs = self._agg_exprs(df)
-        metrics = (
-            df.agg(*[v.alias(k) for k, v in pre_aggs.items()]).first().asDict()
-        )
+        # then keeps one representative per key). The same aggregate
+        # counts the keys, which is the row count after dedup:
+        # keep-latest and keep-first both keep one row per key.
+        metrics = self._metrics(keyed)
         before = metrics.pop("rows_out")
-        dupes = (
-            df.groupBy("business_key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") > 1)
-            .count()
-        )
-        report["duplicates_business_key"] = dupes
-
-        df = self.dedup(df)
-        after = df.count()
+        keys = metrics.pop("distinct_keys")
+        after = keys if c.enforce_unique_key else before
+        report["duplicates_business_key"] = metrics.pop("duplicates_business_key")
         report["dedup_rows_dropped"] = before - after
-
-        df, drift = self.pad_and_reorder(df)
         report.update(drift)
 
         report["rows_out"] = after

@@ -51,8 +51,3 @@ def dedup_keep_first(df: DataFrame, key_cols: list[str]) -> DataFrame:
     contract — cheapest plan, no total order promised)."""
     return df.dropDuplicates(key_cols)
 
-
-def dedup_metrics(df_before: DataFrame, df_after: DataFrame) -> dict[str, int]:
-    """DD4 — two counts; caller may cache df_before if it is expensive."""
-    b, a = df_before.count(), df_after.count()
-    return {"rows_before": b, "rows_after": a, "rows_dropped": b - a}

@@ -331,7 +331,7 @@ def r10_contract_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts", "event_type", "value"
     )
     pipeline = ContractPipeline(Contract.from_dict(_R10_CONTRACT))
-    out = pipeline.apply(ev).df
+    out, _ = pipeline.finish(pipeline.keyed(ev))
     return out.select(
         "surrogate_id", "business_key", "event_id", "event_type", "value"
     )

@@ -33,6 +33,7 @@ NO_JOB = [
     "u35_curation_funnel", "u46_line_dedup", "u51_cms_merge",
     "u68_capped_funnel", "u73_minhash_error_budgeted",
     "u74_split_leakage_budgeted", "x59_market_basket",
+    "r10_contract_end_to_end",
 ]
 
 
@@ -47,7 +48,7 @@ def jobs_to_build_and_explain(spark, name: str) -> list[int]:
     from gov_ec_pipeline_etl_spark.plans import all_queries
     from gov_ec_pipeline_etl_spark.plans.util import T
 
-    for table in ("documents", "embeddings", "lineitem", "part"):
+    for table in ("documents", "embeddings", "events", "lineitem", "part"):
         T(spark, SF_SMOKE, table)  # a first schema read may start a job
     sc = spark.sparkContext
     sc.setJobGroup(f"{name}-build", f"{name} plan construction")

@@ -180,32 +180,78 @@ def test_uuid5_surrogate_method(spark):
     assert row.surrogate_id == uuid5_py("t_uuid", "x|y")
 
 
-def test_observed_metrics_single_pass(spark, pipeline):
-    """attach_observed_metrics: the validation aggregate collected
-    DURING a write action must equal the eager agg over the same frame
-    — the 100 TB path where metrics ride the staging write instead of
-    re-executing the lineage."""
-    import pyspark.sql.functions as F
+def _keyed_contract(**dedup) -> ContractPipeline:
+    """k is the business key, v the critical column; ``dedup`` keys
+    override keep-latest by ``ts``."""
+    return ContractPipeline(Contract.from_dict({
+        "dataset": "t_report",
+        "schema": {"columns": {"k": "string_codes", "v": "string_codes",
+                               "ts": "datetime"}},
+        "quality": {"critical": ["v"]},
+        "ids": {"business_key": {"fields": ["k"]}},
+        "dedup": {"enforce_unique": True, "keep": "latest", "order_by": "ts",
+                  **dedup},
+    }))
 
-    df = _clean_df(spark)
-    df = pipeline.normalize(df)
-    df = pipeline.coerce(df)
-    df = pipeline.derive(df)
-    df = pipeline.apply_rules(df)
-    df = pipeline.add_keys(df)
 
-    eager = {
-        k: v
-        for k, v in df.agg(
-            *[v.alias(k) for k, v in pipeline._agg_exprs(df).items()]
-        )
-        .first()
-        .asDict()
-        .items()
+_KEYED_ROWS = [
+    ("a", "1", "2024-01-01"), ("a", "2", "2024-01-03"), ("a", "3", "2024-01-02"),
+    ("b", "4", "2024-01-01"), ("b", "5", "2024-01-02"),
+    ("c", "6", "2024-01-01"),
+    (None, None, None),  # all-null: dropped before the keys are drawn
+]
+
+
+def _keyed_df(spark, rows=_KEYED_ROWS):
+    return spark.createDataFrame(rows, "k: string, v: string, ts: string")
+
+
+def test_report_keep_latest(spark):
+    """A key three times, a key twice, a unique key and an all-null row:
+    the all-null row counts in rows_in only; two keys repeat, three rows
+    are dropped and the latest row of each key is kept."""
+    res = _keyed_contract().apply(_keyed_df(spark))
+    assert res.report == {
+        "dataset": "t_report", "rows_in": 7, "duplicates_business_key": 2,
+        "dedup_rows_dropped": 3, "schema_missing": [], "schema_extra": [],
+        "rows_out": 3, "critical_failures": [], "recommended_warnings": [],
     }
+    kept = sorted(tuple(r) for r in res.df.select("k", "v").collect())
+    assert kept == [("a", "2"), ("b", "5"), ("c", "6")]
 
-    observed_df, obs = pipeline.attach_observed_metrics(df)
-    # one action — the kind of write the pipeline performs anyway
-    observed_df.write.format("noop").mode("overwrite").save()
-    assert obs.get == eager
-    assert eager["rows_out"] == 3  # sanity: metrics are real
+
+@pytest.mark.parametrize("dedup, rows, counts", [
+    ({"keep": "first"}, _KEYED_ROWS, (7, 2, 3, 3)),
+    ({"enforce_unique": False}, _KEYED_ROWS, (7, 2, 0, 6)),
+    ({}, _KEYED_ROWS[:3], (3, 1, 2, 1)),
+    ({}, [], (0, 0, 0, 0)),
+], ids=["keep_first", "not_unique", "one_key_thrice", "empty"])
+def test_report_counts(spark, dedup, rows, counts):
+    """(rows_in, duplicates_business_key, dedup_rows_dropped, rows_out),
+    and the output holds rows_out rows."""
+    res = _keyed_contract(**dedup).apply(_keyed_df(spark, rows), fail_fast=False)
+    r = res.report
+    assert (r["rows_in"], r["duplicates_business_key"], r["dedup_rows_dropped"],
+            r["rows_out"]) == counts
+    assert res.df.count() == counts[3]
+
+
+def test_apply_runs_two_sql_executions(spark):
+    """rows_in and one validation aggregate: no duplicate-key job and no
+    post-dedup count."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    pipe, df = _keyed_contract(), _keyed_df(spark)
+    bus.waitUntilEmpty()
+    before = store.executionsCount()
+    pipe.apply(df)
+    bus.waitUntilEmpty()
+    assert store.executionsCount() - before == 2
+
+
+def test_missing_tiebreak_fails_before_the_critical_gate(spark):
+    """A declared tiebreak absent from the frame raises ValueError, also
+    when a critical column is empty too."""
+    pipe = _keyed_contract(tiebreak="seq")
+    with pytest.raises(ValueError, match="tiebreak"):
+        pipe.apply(_keyed_df(spark, [("a", None, "2024-01-01")]))

@@ -20,6 +20,8 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
+from scale_gate import commit_stamp  # noqa: E402
 
 QUERIES = [
     "d02_minhash_lsh",
@@ -54,10 +56,7 @@ def main() -> int:
     ap.add_argument("--cores", nargs="+", type=int, default=[8, 32])
     args = ap.parse_args()
 
-    commit = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
-        capture_output=True, text=True, check=False,
-    ).stdout.strip() or None
+    commit = commit_stamp()
 
     results: dict[str, dict[str, dict[str, float]]] = {}
     for name in QUERIES:

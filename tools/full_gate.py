@@ -18,11 +18,10 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from scale_gate import REPO, SCALE_SKIPS, SKEW_SCALE_SKIPS, _gate  # noqa: E402
+from scale_gate import SCALE_SKIPS, SKEW_SCALE_SKIPS, _gate, commit_stamp  # noqa: E402
 
 
 def _skips_for(sf_dir: str) -> dict[str, str]:
@@ -53,10 +52,7 @@ def main() -> int:
     ap.add_argument("--out", required=True, help="artifact path to commit")
     args = ap.parse_args()
 
-    commit = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
-        capture_output=True, text=True, check=False,
-    ).stdout.strip() or None
+    commit = commit_stamp()
     skips = _skips_for(args.sf_dir)
     print(
         f"[full_gate] oracle gate over {args.sf_dir} at {commit} "

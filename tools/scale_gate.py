@@ -67,6 +67,25 @@ SKEW_SCALE_SKIPS = {
     "SymmetricHashJoinStateManager scanning the hot key's value list. "
     "Green at sf0.01 skew and all uniform scales.",
 }
+
+
+def commit_stamp(repo: str = REPO) -> str | None:
+    """HEAD's short hash, suffixed ``-dirty`` when tracked files differ
+    from it; None outside a git checkout."""
+    def git(*args: str) -> subprocess.CompletedProcess:
+        return subprocess.run(["git", *args], cwd=repo, capture_output=True,
+                              text=True, check=False)
+
+    try:
+        head = git("rev-parse", "--short", "HEAD").stdout.strip()
+        dirty = git("diff", "--quiet", "HEAD", "--").returncode == 1
+    except OSError:
+        return None
+    if not head:
+        return None
+    return head + "-dirty" if dirty else head
+
+
 _LINE = re.compile(r"^(\w+): (OK|MISMATCH|ERROR|rows-only)\b(.*?) \[([0-9.]+)s\]$")
 
 
@@ -201,13 +220,7 @@ def main() -> int:
     sf_tag = f"{args.sf:g}" + ("_skew" if args.skew else "")
     data_dir = args.data_dir or os.path.join(REPO, ".localdata", f"sf{sf_tag}")
     out_path = args.out or os.path.join(REPO, f"SCALE_sf{sf_tag}.json")
-    try:
-        commit = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
-            capture_output=True, text=True, check=False,
-        ).stdout.strip() or None
-    except OSError:
-        commit = None
+    commit = commit_stamp()
     summary: dict = {
         "sf": args.sf, "skew": args.skew, "data_dir": data_dir,
         "commit": commit, "generator": None,
